@@ -3,6 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 import java.nio.file.{Files, Paths}
 
@@ -25,6 +26,10 @@ import java.nio.file.{Files, Paths}
   *   - Lazy plans; only the fill means are eagerly collected (they must be
   *     literals before `na.fill` enters the plan, mirroring pandas'
   *     eagerness at wallmart_pipeline.py:83-87).
+  *   - Like the reference's one merged frame, the join is computed once per
+  *     run: `transform` persists the six columns it reads, the means job
+  *     materialises them, and the CSV and JDBC sinks read that copy; `run`
+  *     releases it before returning, on success and on failure.
   *   - `bround` (HALF_EVEN) matches numpy's banker's rounding where pandas
   *     `.round(2)` is used (wallmart_pipeline.py:119).
   *   - `try_to_timestamp` reproduces `pd.to_datetime(errors="coerce")`
@@ -78,12 +83,24 @@ object WalmartPipeline {
       merged
     }
 
-  /** O5-O10: mean-impute, date parse, month derivation, filter, project. */
+  /** The input columns `transform` reads. */
+  private val TransformInput =
+    Seq("Store_ID", "Date", "Weekly_Sales", "IsHoliday", "CPI", "Unemployment")
+
+  private def transformInput(df: DataFrame): DataFrame = df.select(TransformInput.map(col): _*)
+
+  /** O5-O10: mean-impute, date parse, month derivation, filter, project.
+    * Persists the six input columns it reads, so the means job and every
+    * consumer of the result share one scan of `df`; the means job
+    * materialises the copy. The caller owns it: `run` releases it, and a
+    * caller driving the stages itself calls [[release]].
+    */
   def transform(df: DataFrame): DataFrame = stage("transform") {
+    val input = transformInput(df).persist()
     // O5 (wallmart_pipeline.py:84-86): the three column means are a
     // separate eager job — collected to the driver and injected as
     // literals, the one place the lazy graph is deliberately cut.
-    val means = df
+    val means = input
       .agg(avg("Weekly_Sales"), avg("CPI"), avg("Unemployment"))
       .first()
     // O6 (wallmart_pipeline.py:83-87): null-fill with the column means.
@@ -94,7 +111,7 @@ object WalmartPipeline {
       .flatMap { case (name, i) =>
         if (means.isNullAt(i)) None else Some(name -> means.getDouble(i))
       }.toMap
-    val filled = if (fillMap.isEmpty) df else df.na.fill(fillMap)
+    val filled = if (fillMap.isEmpty) input else input.na.fill(fillMap)
     val clean = filled
       // O7 (wallmart_pipeline.py:89): fixed-format parse, coerce-to-null.
       .withColumn("Date", try_to_timestamp(col("Date"), lit("yyyy-MM-dd'T'HH:mm:ss.SSS")))
@@ -135,18 +152,24 @@ object WalmartPipeline {
     (out, inObs, outObs)
   }
 
+  /** Releases the copy `transform(df)` persisted; a no-op when there is none. */
+  def release(df: DataFrame): Unit = transformInput(df).unpersist()
+
   /** O11-O13: group-by-month mean, rename, round 2dp.
     * pandas `groupby` drops NaN keys (wallmart_pipeline.py:117) — Spark
     * keeps a NULL group, so the parity filter is explicit. `bround` is
     * HALF_EVEN, matching numpy's banker's rounding at
-    * wallmart_pipeline.py:119.
+    * wallmart_pipeline.py:119. The result has at most 12 rows at any input
+    * size, so it is sorted in one partition: a global `orderBy` would add
+    * a range-partition sampling job and a shuffle for nothing.
     */
   def avgWeeklySalesPerMonth(df: DataFrame): DataFrame =
     stage("avg_weekly_sales_per_month") {
       val agg = df.filter(col("Month").isNotNull)
         .groupBy("Month")
         .agg(bround(avg("Weekly_Sales"), 2).as("Avg_Sales"))
-        .orderBy("Month")
+        .coalesce(1)
+        .sortWithinPartitions("Month")
       PipelineLog.info("Average weekly sales per month calculated successfully.")
       agg
     }
@@ -154,7 +177,10 @@ object WalmartPipeline {
   /** Frames whose Catalyst-estimated output size is below this are written
     * as a single file (reference-parity shape); larger frames keep their
     * partitioning. Catalyst plan statistics cost no extra job — unlike a
-    * count() heuristic — and 64 MB is comfortably one writer task.
+    * count() heuristic — and 64 MB is comfortably one writer task. The
+    * gate needs a real estimate: Catalyst sizes an uncached join as the
+    * product of its sides, so for the pipeline's frames it works because
+    * they read the copy `transform` materialises.
     */
   val SingleFileMaxBytes: Long = 64L << 20
 
@@ -201,16 +227,20 @@ object WalmartPipeline {
     try {
       PipelineLog.info("Starting data pipeline execution.")
       val merged = extract(spark, csvPath, parquetPath)
-      val clean  = transform(merged)
-      val agg    = avgWeeklySalesPerMonth(clean)
-      val frames = Map("clean_data" -> clean, "agg_data" -> agg)
-      val paths  = load(frames, outDir)
-      jdbcUrl.foreach { url =>
-        frames.foreach { case (name, df) => JdbcSink.write(df, url, name) }
-      }
-      val results = validate(paths)
-      PipelineLog.info("Data pipeline execution completed successfully.")
-      results
+      // a copy a stage-by-stage caller persisted earlier is theirs to release
+      val owned = transformInput(merged).storageLevel == StorageLevel.NONE
+      try {
+        val clean  = transform(merged)
+        val agg    = avgWeeklySalesPerMonth(clean)
+        val frames = Map("clean_data" -> clean, "agg_data" -> agg)
+        val paths  = load(frames, outDir)
+        jdbcUrl.foreach { url =>
+          frames.foreach { case (name, df) => JdbcSink.write(df, url, name) }
+        }
+        val results = validate(paths)
+        PipelineLog.info("Data pipeline execution completed successfully.")
+        results
+      } finally if (owned) release(merged)
     } catch {
       case e: Throwable =>
         PipelineLog.critical(s"Critical error in main(): ${e.getMessage}")

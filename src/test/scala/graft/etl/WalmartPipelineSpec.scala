@@ -61,6 +61,26 @@ class WalmartPipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(m1 == 19000.0, "Incorrect average calculation for month 1")
   }
 
+  test("avgWeeklySalesPerMonth sorts in one partition, with no range shuffle") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val clean = (0 until 600).map(i => ((i * 7) % 12 + 1, 10000.0 + i))
+      .toDF("Month", "Weekly_Sales").repartition(4)
+
+    val agg = WalmartPipeline.avgWeeklySalesPerMonth(clean)
+    val months = agg.collect().map(_.getInt(0)).toSeq
+
+    assert(months == (1 to 12))
+    assert(agg.rdd.getNumPartitions == 1)
+    val helper = new AdaptiveSparkPlanHelper {}
+    val ranges = helper.collect(agg.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+    }
+    assert(ranges.isEmpty, agg.queryExecution.executedPlan)
+  }
+
   // --- golden end-to-end on the reference's shipped inputs ---
   test("full pipeline on reference inputs reproduces golden agg_data") {
     import spark.implicits._

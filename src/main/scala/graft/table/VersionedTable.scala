@@ -4,6 +4,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths}
 import java.util.UUID
+import java.util.concurrent.TimeoutException
+
+import scala.concurrent.Await
+import scala.concurrent.duration.DurationInt
+import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
@@ -221,17 +226,12 @@ final class VersionedTable private (val root: Path) {
     require(v >= 0, "nothing to checkpoint")
     val target = logDir.resolve(checkpointFileName(v))
     if (!Files.exists(target)) {
-      val files = activeFiles(v)
       // stats ride the checkpoint too, so data-skipping reads share the
       // O(tail) replay bound instead of re-walking the whole log
-      val stats = fileStats(v)
-      val rows = activeAdds(v).map(a => a.path -> a.rows).toMap
-      val entries = files.map { f =>
-        val r = rows.get(f).filter(_ >= 0).map(n => s""","rows":$n""").getOrElse("")
-        stats.get(f) match {
-          case Some((mn, mx)) => s"""{"path":"$f"$r,"min":$mn,"max":$mx}"""
-          case None => s"""{"path":"$f"$r}"""
-        }
+      val entries = activeAdds(v).map { a =>
+        val r = if (a.rows >= 0) s""","rows":${a.rows}""" else ""
+        val st = a.stats.map { case (mn, mx) => s""","min":$mn,"max":$mx""" }.getOrElse("")
+        s"""{"path":"${a.path}"$r$st}"""
       }
       val tmp = logDir.resolve(s".tmp-cp-${UUID.randomUUID()}.json")
       Files.writeString(tmp,
@@ -379,23 +379,30 @@ final class VersionedTable private (val root: Path) {
 
   /** Write `df` as a fresh immutable data directory; returns the add
     * entry (path, rows, and — when the table logs a stats column — the
-    * written data's min/max of it, gathered in the SAME aggregate pass
-    * as the row count). Not yet visible — only a commit publishes it.
+    * written data's min/max of it). The row count and stats are gathered
+    * IN the write job by an [[org.apache.spark.sql.Observation]], so the
+    * input dataflow (a merge's join, a compaction's shuffle) runs once.
+    * Not yet visible — only a commit publishes it. Throws, before any
+    * commit, if the write's metrics do not arrive: a row count is never
+    * guessed.
     */
   private def writeData(df: DataFrame,
                         statsCol: Option[String] = statsColumn): AddEntry = {
+    import org.apache.spark.sql.Observation
     import org.apache.spark.sql.functions.{col, count, lit, max, min}
     val rel = s"data/${UUID.randomUUID()}"
-    val entry = statsCol match {
-      case Some(c) =>
-        val r = df.agg(count(lit(1)), min(col(c)).cast("long"),
-          max(col(c)).cast("long")).head()
-        AddEntry(rel, r.getLong(0),
-          if (r.isNullAt(1)) None else Some((r.getLong(1), r.getLong(2))))
-      case None => AddEntry(rel, df.count(), None)
+    val obs = Observation()
+    val stats = statsCol.toSeq.flatMap(c =>
+      Seq(min(col(c)).cast("long").as("min"), max(col(c)).cast("long").as("max")))
+    df.observe(obs, count(lit(1)).as("rows"), stats: _*)
+      .write.mode("errorifexists").parquet(root.resolve(rel).toString)
+    // the listener bus delivers the metrics after the write job ends
+    val r = try Await.result(obs.future, WriteMetricsWait) catch {
+      case e: TimeoutException => throw new IllegalStateException(
+        s"write of $rel in $root reported no row count within $WriteMetricsWait", e)
     }
-    df.write.mode("errorifexists").parquet(root.resolve(rel).toString)
-    entry
+    AddEntry(rel, r.getLong(0),
+      if (stats.isEmpty || r.isNullAt(1)) None else Some((r.getLong(1), r.getLong(2))))
   }
 
   /** Publish one commit targeting `readVersion + 1`.
@@ -427,7 +434,7 @@ final class VersionedTable private (val root: Path) {
       // periodic checkpoint so reader replay stays O(interval); purely
       // an accelerator, so best-effort is correct
       if (version > 0 && version % CheckpointInterval == 0)
-        try checkpoint() catch { case _: Throwable => () }
+        try checkpoint() catch { case NonFatal(_) => () }
       version
     } catch {
       case _: FileAlreadyExistsException =>
@@ -773,7 +780,8 @@ final class VersionedTable private (val root: Path) {
       .collect().map(_.getString(0)).toSet // bounded by |active files|
     if (touchedUris.isEmpty) return -1L
     val touched = activeFiles(readVersion).filter { rel =>
-      touchedUris.exists(u => u.contains(rel))
+      // the trailing "/" keeps __bucket=1 from matching __bucket=10's files
+      touchedUris.exists(u => u.contains(rel + "/"))
     }
     val reader = schemaOf(readVersion).fold(spark.read)(s => spark.read.schema(s))
     val kept = reader
@@ -946,6 +954,9 @@ object VersionedTable {
     * commit files plus one checkpoint read.
     */
   val CheckpointInterval = 10
+
+  /** How long a write waits for its observed row count and stats. */
+  private val WriteMetricsWait = 60.seconds
 
   /** One published data write: table-relative path, row count, and the
     * stats column's (min, max) when the table records stats.

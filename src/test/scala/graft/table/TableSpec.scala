@@ -242,6 +242,54 @@ class TableSpec extends AnyFunSuite with SparkSessionTestWrapper {
     }
   }
 
+  test("DELETE WHERE after a 12-bucket OPTIMIZE rewrites only the bucket holding the match") {
+    import spark.implicits._
+    val t = VersionedTable.create(graft.ops.Core.tmp("vt_del_bucket"),
+      base, statsCol = Some("c_custkey"))
+    val vOpt = t.optimize(spark, $"c_custkey", nBuckets = 12, readVersion = 0L)
+    val adds = t.commitInfo(vOpt)._2
+    assert(adds.size == 12)
+    // "__bucket=1" is a prefix of "__bucket=10": only the latter holds the key
+    val b10 = adds.find(_.path.endsWith("/__bucket=10")).get
+    val key = b10.stats.get._1
+    val v = t.deleteWhere(spark, s"c_custkey = $key", vOpt)
+    assert(t.commitInfo(v)._3 == Seq(b10.path))
+    assert(t.snapshot(spark).count() == base.count() - 1)
+  }
+
+  test("checkpoint entries match the active files, rows and stats replayed from the log") {
+    import spark.implicits._
+    val t = VersionedTable.create(graft.ops.Core.tmp("vt_cp_content"),
+      base.filter($"c_custkey" < 50), statsCol = Some("c_custkey")) // v0
+    t.append(base.filter($"c_custkey" >= 50 && $"c_custkey" < 100)) // v1
+    t.deleteWhere(spark, "c_custkey = 7", t.latestVersion) // v2 removes v0's file
+    t.append(base.filter($"c_custkey" < 0)) // v3: empty, no stats
+    // the checkpoint as built from three separate replays of the log
+    def replayed(v: Long): String = {
+      val stats = t.fileStats(v)
+      val rows = t.activeAdds(v).map(a => a.path -> a.rows).toMap
+      val entries = t.activeFiles(v).map { f =>
+        val r = rows.get(f).filter(_ >= 0).map(n => s""","rows":$n""").getOrElse("")
+        stats.get(f) match {
+          case Some((mn, mx)) => s"""{"path":"$f"$r,"min":$mn,"max":$mx}"""
+          case None => s"""{"path":"$f"$r}"""
+        }
+      }
+      s"""{"version":$v,"active":[${entries.mkString(",")}]}"""
+    }
+    def written(v: Long): String = Files.readString(
+      t.root.resolve("_txn_log").resolve(f"$v%020d.checkpoint.json"))
+    val want3 = replayed(3L)
+    assert(t.checkpoint() == 3L)
+    assert(written(3L) == want3)
+    t.restore(toVersion = 1L, readVersion = 3L) // v4 re-adds v0's file
+    t.append(base.filter($"c_custkey" >= 100)) // v5
+    val want5 = replayed(5L) // starts from the v3 checkpoint
+    assert(t.checkpoint() == 5L)
+    assert(written(5L) == want5)
+    assert(t.activeAdds(5L).size == 3)
+  }
+
   test("vacuum keeps a live optimized layout and reclaims a superseded one recursively") {
     import spark.implicits._
     val t = VersionedTable.create(graft.ops.Core.tmp("vt_opt_vac"),

@@ -1,11 +1,17 @@
 package graft.etl
 
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, LinkOption, Paths, StandardCopyOption}
+import java.util.UUID
 
 /** Reference-parity ETL pipeline, re-expressed Spark-first.
   *
@@ -26,10 +32,16 @@ import java.nio.file.{Files, Paths}
   *   - Lazy plans; only the fill means are eagerly collected (they must be
   *     literals before `na.fill` enters the plan, mirroring pandas'
   *     eagerness at wallmart_pipeline.py:83-87).
+  *   - The extra_data schema comes from one parquet footer read on the
+  *     driver, the file Spark's own inference would read, so `extract`
+  *     starts no Spark job.
   *   - Like the reference's one merged frame, the join is computed once per
   *     run: `transform` persists the six columns it reads, the means job
   *     materialises them, and the CSV and JDBC sinks read that copy; `run`
   *     releases it before returning, on success and on failure.
+  *   - The CSV sinks are written concurrently into a staging directory and
+  *     published by rename once all of them are written, so a failed run
+  *     leaves the last good outputs in place.
   *   - `bround` (HALF_EVEN) matches numpy's banker's rounding where pandas
   *     `.round(2)` is used (wallmart_pipeline.py:119).
   *   - `try_to_timestamp` reproduces `pd.to_datetime(errors="coerce")`
@@ -74,7 +86,7 @@ object WalmartPipeline {
         .option("encoding", "UTF-8")
         .schema(grocerySchema)
         .csv(csvPath)
-      val extra = spark.read.parquet(parquetPath)
+      val extra = readParquet(spark, parquetPath)
       // O3 (wallmart_pipeline.py:55-57): fail fast if the join key is absent.
       require(store.columns.contains("index"), "Input data is missing index column: csv")
       require(extra.columns.contains("index"), "Input data is missing index column: parquet")
@@ -82,6 +94,40 @@ object WalmartPipeline {
       PipelineLog.info("Data successfully extracted and merged.")
       merged
     }
+
+  /** `spark.read.parquet(path)` without the Spark job that infers its
+    * schema. With `mergeSchema` off (the session default) that job reads
+    * one footer: `_common_metadata`, else `_metadata`, else the first data
+    * file in path order. The same footer is read here, on the driver, and
+    * converted as Spark converts it, so Spark's row metadata and the
+    * session's parquet confs apply. With no such file the reader infers,
+    * and raises Spark's own error.
+    */
+  private[etl] def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new HPath(path)
+    val fs = root.getFileSystem(conf)
+    // what Spark's file index leaves out of a listing: `_*` (except
+    // partition directories and the summary files), `.*`, `*._COPYING_`
+    def hidden(name: String): Boolean =
+      ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+        name.endsWith("._COPYING_")) &&
+        !(name.startsWith("_common_metadata") || name.startsWith("_metadata"))
+    def leaves(s: FileStatus): Seq[FileStatus] =
+      if (!s.isDirectory) Seq(s)
+      else fs.listStatus(s.getPath).toSeq.filterNot(c => hidden(c.getPath.getName)).flatMap(leaves)
+    val files = Option(fs.globStatus(root)).toSeq.flatten.flatMap(leaves).sortBy(_.getPath.toString)
+    val summaries = Seq("_common_metadata", "_metadata")
+    val picked = summaries.flatMap(n => files.find(_.getPath.getName == n)).headOption
+      .orElse(files.find(f => !summaries.contains(f.getPath.getName)))
+    val schema = picked.map { f =>
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(f, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    }
+    schema.fold(spark.read)(spark.read.schema(_)).parquet(path)
+  }
 
   /** The input columns `transform` reads. */
   private val TransformInput =
@@ -184,31 +230,77 @@ object WalmartPipeline {
     */
   val SingleFileMaxBytes: Long = 64L << 20
 
-  /** O14: CSV sinks, header on, overwrite (wallmart_pipeline.py:140-143).
-    * Returns the written paths for validation. `coalesce(1)` reproduces
-    * the reference's single-file output only when the optimizer's size
-    * estimate says the frame is small; a 100 TB `clean_data` would
-    * otherwise funnel through one task and one file.
+  /** O14: CSV sinks, header on (wallmart_pipeline.py:140-143). Returns
+    * the written paths `outDir/<name>` in name order, for validation.
+    * `coalesce(1)` reproduces the reference's single-file output only when
+    * the optimizer's size estimate says the frame is small; a 100 TB
+    * `clean_data` would otherwise funnel through one task and one file.
+    *
+    * The sinks are written concurrently, each under
+    * `outDir/.staging-<uuid>/<name>`; only once every write has succeeded
+    * is each `outDir/<name>` replaced by a rename, so a failed load leaves
+    * the previous outputs as they were. The staging directory is removed
+    * on success and on failure. A failure is thrown once every write has
+    * finished: the first in name order, with the others suppressed.
     */
   def load(frames: Map[String, DataFrame], outDir: String): Seq[String] =
     stage("load") {
-      frames.toSeq.sortBy(_._1).map { case (name, df) =>
-        val path = s"$outDir/$name"
-        val estBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-        val shaped = if (estBytes <= SingleFileMaxBytes) df.coalesce(1) else df
-        shaped.write.mode("overwrite").option("header", "true").csv(path)
-        PipelineLog.info(s"$path saved successfully.")
-        path
-      }
+      val sinks = frames.toSeq.sortBy(_._1)
+      val staging = Paths.get(outDir, s".staging-${UUID.randomUUID()}")
+      try {
+        concurrently(sinks.map { case (name, df) => () =>
+          val estBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+          val shaped = if (estBytes <= SingleFileMaxBytes) df.coalesce(1) else df
+          shaped.write.option("header", "true").csv(staging.resolve(name).toString)
+        })
+        // a replaced output is moved aside first: a directory cannot be
+        // renamed onto a non-empty one
+        lazy val replaced = Files.createTempDirectory(staging, "replaced-")
+        sinks.map { case (name, _) =>
+          val path = s"$outDir/$name"
+          val target = Paths.get(path)
+          if (Files.exists(target, LinkOption.NOFOLLOW_LINKS))
+            Files.move(target, replaced.resolve(name), StandardCopyOption.ATOMIC_MOVE)
+          Files.move(staging.resolve(name), target, StandardCopyOption.ATOMIC_MOVE)
+          PipelineLog.info(s"$path saved successfully.")
+          path
+        }
+      } finally if (Files.exists(staging)) graft.ops.Core.deleteRecursively(staging)
     }
 
-  /** O16: output-existence validation (wallmart_pipeline.py:157-168) —
-    * like the reference's `validation`, a missing file logs an error but
-    * does not raise; the caller inspects the returned flags.
+  /** Runs every task and returns once all have finished: the first on the
+    * calling thread, each other on a thread created here, which inherits
+    * the caller's Spark local properties (job group, job tags, description,
+    * scheduler pool). Then throws the first failure in task order, with
+    * the later ones attached as suppressed.
+    */
+  private def concurrently(tasks: Seq[() => Unit]): Unit = {
+    val failures = new Array[Throwable](tasks.size)
+    def attempt(i: Int): Unit = try tasks(i)() catch { case e: Throwable => failures(i) = e }
+    val threads = tasks.indices.drop(1).map { i =>
+      val t = new Thread(() => attempt(i), s"graft-load-$i")
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+    if (tasks.nonEmpty) attempt(0)
+    threads.foreach(_.join())
+    val failed = failures.filter(_ != null)
+    if (failed.nonEmpty) {
+      failed.tail.foreach(failed.head.addSuppressed)
+      throw failed.head
+    }
+  }
+
+  /** O16: output validation (wallmart_pipeline.py:157-168) — a sink
+    * counts as created when its directory holds the `_SUCCESS` marker a
+    * completed write leaves. Like the reference's `validation`, a missing
+    * output logs an error but does not raise; the caller inspects the
+    * returned flags.
     */
   def validate(paths: Seq[String]): Seq[(String, Boolean)] =
     paths.map { p =>
-      val ok = Files.exists(Paths.get(p))
+      val ok = Files.exists(Paths.get(p, "_SUCCESS"))
       if (ok) PipelineLog.info(s"$p validated successfully.")
       else PipelineLog.error(s"Error: $p was not created.")
       p -> ok

@@ -30,9 +30,9 @@ object Core {
     root
   }
 
-  private def deleteRecursively(p: Path): Unit = {
+  private[graft] def deleteRecursively(p: Path): Unit = {
     import scala.jdk.CollectionConverters._
-    if (Files.isDirectory(p)) {
+    if (Files.isDirectory(p, java.nio.file.LinkOption.NOFOLLOW_LINKS)) {
       val children = Files.list(p)
       try children.iterator().asScala.foreach(deleteRecursively)
       finally children.close() // Files.list holds a handle until closed

@@ -231,7 +231,7 @@ final class VersionedTable private (val root: Path) {
       val entries = activeAdds(v).map { a =>
         val r = if (a.rows >= 0) s""","rows":${a.rows}""" else ""
         val st = a.stats.map { case (mn, mx) => s""","min":$mn,"max":$mx""" }.getOrElse("")
-        s"""{"path":"${a.path}"$r$st}"""
+        s"""{"path":${Mapper.writeValueAsString(a.path)}$r$st}"""
       }
       val tmp = logDir.resolve(s".tmp-cp-${UUID.randomUUID()}.json")
       Files.writeString(tmp,
@@ -416,16 +416,17 @@ final class VersionedTable private (val root: Path) {
              constraintsJson: Option[String] = None): Long = {
     val version = readVersion + 1
     val sb = new StringBuilder
-    val meta = statsColMeta.map(c => s""","statsCol":"$c"""").getOrElse("") +
+    def str(v: String) = Mapper.writeValueAsString(v)
+    val meta = statsColMeta.map(c => s""","statsCol":${str(c)}""").getOrElse("") +
       schemaJson.map(j => s""","schema":$j""").getOrElse("") +
       txnId.map(t => s""","txn":$t""").getOrElse("") +
       constraintsJson.map(c => s""","constraints":$c""").getOrElse("")
-    sb.append(s"""{"commit":{"version":$version,"op":"${op}","readVersion":$readVersion$meta}}""")
+    sb.append(s"""{"commit":{"version":$version,"op":${str(op)},"readVersion":$readVersion$meta}}""")
     adds.foreach { a =>
       val st = a.stats.map { case (mn, mx) => s""","min":$mn,"max":$mx""" }.getOrElse("")
-      sb.append('\n').append(s"""{"add":{"path":"${a.path}","rows":${a.rows}$st}}""") }
+      sb.append('\n').append(s"""{"add":{"path":${str(a.path)},"rows":${a.rows}$st}}""") }
     removes.foreach { p =>
-      sb.append('\n').append(s"""{"remove":{"path":"$p"}}""") }
+      sb.append('\n').append(s"""{"remove":{"path":${str(p)}}}""") }
     val tmp = logDir.resolve(s".tmp-${UUID.randomUUID()}.json")
     Files.writeString(tmp, sb.toString)
     val target = logDir.resolve(versionFileName(version))

@@ -870,4 +870,28 @@ class TableSpec extends AnyFunSuite with SparkSessionTestWrapper {
     t2.append(Seq((-5L, "now ok", 1.0)).toDF("c_custkey", "c_name", "c_acctbal"))
     assert(t2.snapshot(spark).filter($"c_custkey" === -5L).count() == 1)
   }
+
+  test("log lines stay well-formed JSON whatever the stats column and paths are named") {
+    import spark.implicits._
+    val odd = "a\"b"
+    val df = base.select($"c_custkey".as(odd), $"c_name")
+    val t = VersionedTable.create(graft.ops.Core.tmp("vt_quote"),
+      df.filter(col(s"`$odd`") < 50), statsCol = Some(odd))
+    assert(t.statsColumn.contains(odd))
+    t.append(df.filter(col(s"`$odd`") >= 50))
+    assert(t.latestVersion == 1)
+    assert(t.snapshot(spark).count() == base.count())
+    val (skipped, kept, total) = t.snapshotWhere(spark, lo = 60, hi = 90)
+    assert(total == 2 && kept == 1)
+    assert(skipped.count() == base.filter($"c_custkey".between(60, 90)).count())
+
+    // paths, removes and op names with quotes and backslashes round-trip
+    // through a commit and a checkpoint
+    val path = "data/q\"uote\\d"
+    val v = t.commit("odd \"op\"", t.latestVersion,
+      Seq(VersionedTable.AddEntry(path, 0L, None)), Seq(t.activeFiles(t.latestVersion).head))
+    assert(t.activeFiles(v).contains(path))
+    assert(t.checkpoint() == v)
+    assert(t.activeFiles(v) == Seq(t.activeFiles(v - 1).last, path))
+  }
 }

@@ -4355,7 +4355,7 @@ object Relational {
   // never in the data — and at any scale factor the only thing that
   // ever moves is the census.
   // Round-13 re-pair (r12 verdict item #6): clean 24-thread windows
-  // read 1.74 s warm resident (Profile min-of-3) and 3.01 s under full
+  // read 1.74 s warm resident (min-of-3) and 3.01 s under full
   // bench conditions (cold caches per query, eff 19.7) vs the 0.9 s
   // DuckDB twin. The residual is the ~14-job launch chain over a
   // calendar-bounded workload that no longer grows with SF — the >2×

@@ -84,8 +84,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * before encoding, so pruning is encoding-independent, and `codec`
   * compression composes on top of the encoded segment.
   *
-  * Where that trade lands, MEASURED (FormatBench, paired interleaved
-  * runs vs parquet on identical clustered lineitem, gcol_bench.json).
+  * Where that trade lands, MEASURED (paired interleaved runs vs
+  * parquet on identical clustered lineitem, recorded in gcol_bench.json).
   * The first round of measurements exposed a real scale flaw — one
   * task per 16 384-row block billed ~0.3 s of pure scheduling to a
   * 367-block sf1 scan and lost the scan-everything shapes to parquet
@@ -840,7 +840,7 @@ private[sources] sealed trait GcolReadPartition extends InputPartition {
 
 /** One TASK = a pack of surviving blocks up to the split-size target —
   * task count tracks data volume (Spark's FilePartition discipline),
-  * never raw block count (round-14 FormatBench: one-task-per-16k-row-
+  * never raw block count (round 14, gcol_bench.json: one-task-per-16k-row-
   * block billed ~0.3 s of pure scheduling to a 367-block sf1 scan).
   */
 private[sources] case class GcolBlockPartition(

@@ -129,7 +129,7 @@ private[sources] class GraftBatchWrite(root: String, schema: StructType,
       t.validateConstraints(
         spark.read.schema(schema)
           .parquet(adds.map(a => Paths.get(root).resolve(a.path).toString): _*),
-        t.latestVersion, if (replace) "overwrite" else "append")
+        t.checkConstraints, if (replace) "overwrite" else "append")
     val op = if (replace) "overwrite" else "append"
     var attempt = 0
     while (true) {

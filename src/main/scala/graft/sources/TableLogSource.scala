@@ -3,8 +3,6 @@ package graft.sources
 import java.nio.file.{Files, Path, Paths}
 import java.util
 
-import com.fasterxml.jackson.databind.ObjectMapper
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -61,53 +59,23 @@ object TableLogSource {
     StructField("rows_added", LongType, nullable = false),
     StructField("txn", LongType, nullable = true)))
 
-  private val Mapper = new ObjectMapper()
-
   private def logDir(root: String): Path =
     Paths.get(root).resolve(graft.table.VersionedTable.LogDirName)
 
-  /** Latest committed version (−1 for an empty/new table). Scans the log
-    * dir rather than opening the table class: the source must not race a
-    * writer's in-flight tmp files, and named version files are the
-    * atomic-publish contract.
+  /** Latest committed version (−1 for an empty/new table or a missing
+    * log directory).
     */
   def latestVersion(root: String): Long = {
     val d = logDir(root)
-    if (!Files.isDirectory(d)) return -1L
-    val s = Files.list(d)
-    try {
-      s.filter(p => p.getFileName.toString.matches("\\d{20}\\.json"))
-        .mapToLong(p => p.getFileName.toString.dropRight(5).toLong)
-        .max().orElse(-1L)
-    } finally s.close()
+    if (Files.isDirectory(d)) graft.table.VersionedTable.latestVersion(d) else -1L
   }
 
   /** Parse versions [from, to] into history rows. */
   def commitRows(root: String, from: Long, to: Long): Iterator[InternalRow] =
     (math.max(0L, from) to to).iterator.map { v =>
-      val f = logDir(root).resolve(f"$v%020d.json")
-      var op: UTF8String = UTF8String.fromString("?")
-      var readVersion = -1L
-      var nAdds = 0
-      var nRemoves = 0
-      var rowsAdded = 0L
-      var txn: Any = null
-      Files.readAllLines(f).forEach { line =>
-        val node = Mapper.readTree(line)
-        if (node.has("commit")) {
-          val c = node.get("commit")
-          op = UTF8String.fromString(c.get("op").asText())
-          readVersion = c.get("readVersion").asLong()
-          if (c.has("txn")) txn = c.get("txn").asLong()
-        }
-        if (node.has("add")) {
-          nAdds += 1
-          rowsAdded += node.get("add").get("rows").asLong()
-        }
-        if (node.has("remove")) nRemoves += 1
-      }
-      new GenericInternalRow(
-        Array[Any](v, op, readVersion, nAdds, nRemoves, rowsAdded, txn))
+      val c = graft.table.VersionedTable.commitAt(logDir(root), v)
+      new GenericInternalRow(Array[Any](v, UTF8String.fromString(c.op), c.readVersion,
+        c.adds.size, c.removes.size, c.adds.map(_.rows).sum, c.txn.getOrElse(null)))
     }
 }
 

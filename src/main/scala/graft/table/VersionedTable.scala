@@ -1,16 +1,21 @@
 package graft.table
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths}
 import java.util.UUID
 import java.util.concurrent.TimeoutException
 
+import scala.collection.immutable.VectorMap
 import scala.concurrent.Await
 import scala.concurrent.duration.DurationInt
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
+import com.fasterxml.jackson.databind.util.RawValue
 
 /** Thrown when an optimistic commit loses the race: another writer
   * published the version this transaction targeted. The caller re-reads
@@ -32,11 +37,25 @@ class ConstraintViolationException(msg: String) extends RuntimeException(msg)
   * Layout under the table root:
   * {{{
   *   _txn_log/00000000000000000000.json   one file PER VERSION, JSON lines:
-  *       {"commit":{"version":0,"op":"create","readVersion":-1}}
-  *       {"add":{"path":"data/<uuid>","rows":1500}}
+  *       {"commit":{"version":0,"op":"create","readVersion":-1,
+  *                  "statsCol":"k","schema":{...},"txn":7}}
+  *       {"add":{"path":"data/<uuid>","rows":1500,"min":1,"max":1500}}
   *       {"remove":{"path":"data/<older>"}}
+  *   _txn_log/00000000000000000010.checkpoint.json   the commit that
+  *       BUILDS state 10 from nothing, in the same format:
+  *       {"commit":{"version":10,"op":"checkpoint","readVersion":-1,
+  *                  "statsCol":"k","schema":{...},"txn":7,"constraints":[...]}}
+  *       {"add":{"path":"data/<uuid>","rows":1500,"min":1,"max":1500}}
+  *       ... one add line per active file, in state order
   *   data/<uuid>/part-*.parquet           immutable Spark parquet writes
   * }}}
+  *
+  * Every read is a projection of ONE [[VersionedTable.TableState]] per
+  * version: the newest checkpoint at or before it plus the log tail,
+  * folded once (Delta's snapshot-from-checkpoint-plus-tail design). A
+  * checkpoint carries the whole state — files with rows and stats,
+  * schema, stats column, CHECK constraints and txn cursor — so no read
+  * or write at or after a checkpoint opens a log file before it.
   *
   * The contract, and how each piece is achieved on a filesystem:
   *
@@ -77,102 +96,42 @@ final class VersionedTable private (val root: Path) {
   private def logDir: Path = root.resolve(LogDirName)
 
   /** Largest committed version, or -1 for an empty/uninitialized log. */
-  def latestVersion: Long = {
-    val files = Files.list(logDir)
-    try {
-      import scala.jdk.CollectionConverters._
-      files.iterator().asScala
-        .map(_.getFileName.toString)
-        // only fully-published version files count — a crashed writer's
-        // .tmp-* debris must stay invisible to readers
-        .filter(_.matches("\\d{20}\\.json"))
-        .map(_.stripSuffix(".json").toLong)
-        .foldLeft(-1L)(math.max)
-    } finally files.close()
-  }
+  def latestVersion: Long = VersionedTable.latestVersion(logDir)
 
-  /** Largest checkpointed version ≤ `version`, or -1 if none. */
-  private def latestCheckpointAtOrBefore(version: Long): Long = {
-    val files = Files.list(logDir)
-    try {
-      import scala.jdk.CollectionConverters._
-      files.iterator().asScala
-        .map(_.getFileName.toString)
-        .filter(_.matches("\\d{20}\\.checkpoint\\.json"))
-        .map(_.stripSuffix(".checkpoint.json").toLong)
-        .filter(_ <= version)
-        .foldLeft(-1L)(math.max)
-    } finally files.close()
-  }
-
-  /** Active data paths (relative) at `version`: start from the newest
-    * checkpoint at or before it, then replay only the log TAIL.
-    * Insertion order is kept so snapshots list files deterministically.
-    * With periodic checkpoints a reader's cost is O(commits since last
-    * checkpoint), not O(table lifetime) — the piece that keeps a table
-    * with years of minutely commits readable in constant time.
+  /** The table state at `version`: the newest checkpoint at or before it,
+    * then the log TAIL. With periodic checkpoints a read costs
+    * O(commits since last checkpoint), not O(table lifetime) — the piece
+    * that keeps a table with years of minutely commits readable in
+    * constant time. The tail is STRICT: a missing log version fails
+    * loudly, never silently degrades the state.
     */
-  def activeFiles(version: Long): Seq[String] = {
-    val active = scala.collection.mutable.LinkedHashSet[String]()
-    val cp = latestCheckpointAtOrBefore(version)
-    if (cp >= 0) {
-      val node = Mapper.readTree(
-        Files.readString(logDir.resolve(checkpointFileName(cp))))
-      node.get("active").forEach(p =>
-        active += (if (p.isTextual) p.asText() else p.get("path").asText()))
-    }
-    (cp + 1 to version).foreach { v =>
-      val f = logDir.resolve(versionFileName(v))
-      require(Files.exists(f), s"missing log version $v in $logDir")
-      Files.readAllLines(f).forEach { line =>
-        val node = Mapper.readTree(line)
-        if (node.has("add")) active += node.get("add").get("path").asText()
-        if (node.has("remove")) active -= node.get("remove").get("path").asText()
-      }
-    }
-    active.toSeq
+  private[graft] def state(version: Long): TableState =
+    states(version, version).next()
+
+  /** The states of versions `from` to `to`, ascending, built by ONE fold.
+    * A checkpoint in the legacy single-object form is not read: the fold
+    * then starts at version 0 (no code path deletes log files, and the
+    * next auto-checkpoint restores the tail bound).
+    */
+  private def states(from: Long, to: Long): Iterator[TableState] = {
+    val cp = latestCheckpoint(logDir, from)
+    val base = (if (cp >= 0) readLog(logDir.resolve(checkpointFileName(cp))) else None)
+      .fold(TableState.Empty)(TableState.Empty.next)
+    (base.version + 1 to to).iterator.map(v => commitAt(logDir, v))
+      .scanLeft(base)(_ next _)
+      .dropWhile(_.version < from)
   }
+
+  /** Active data paths (relative) at `version`, in commit order, so
+    * snapshots list files deterministically.
+    */
+  def activeFiles(version: Long): Seq[String] = state(version).files
 
   /** Active files at `version` WITH their logged row counts and stats —
     * the full add-entry view [[restore]] needs to re-activate a past
-    * file set. Same checkpoint + tail replay as activeFiles; files that
-    * entered via a checkpoint written before checkpoints carried row
-    * counts surface rows = -1 (advisory metadata, never load-bearing).
+    * file set.
     */
-  def activeAdds(version: Long): Seq[AddEntry] = {
-    val active = scala.collection.mutable.LinkedHashMap[String, AddEntry]()
-    val cp = latestCheckpointAtOrBefore(version)
-    if (cp >= 0) {
-      val node = Mapper.readTree(
-        Files.readString(logDir.resolve(checkpointFileName(cp))))
-      node.get("active").forEach { p =>
-        if (p.isTextual) active(p.asText()) = AddEntry(p.asText(), -1L, None)
-        else {
-          val path = p.get("path").asText()
-          val rows = if (p.has("rows")) p.get("rows").asLong() else -1L
-          val st = if (p.has("min") && p.has("max"))
-            Some((p.get("min").asLong(), p.get("max").asLong())) else None
-          active(path) = AddEntry(path, rows, st)
-        }
-      }
-    }
-    (cp + 1 to version).foreach { v =>
-      val f = logDir.resolve(versionFileName(v))
-      require(Files.exists(f), s"missing log version $v in $logDir")
-      Files.readAllLines(f).forEach { line =>
-        val node = Mapper.readTree(line)
-        if (node.has("add")) {
-          val a = node.get("add")
-          val path = a.get("path").asText()
-          val st = if (a.has("min") && a.has("max"))
-            Some((a.get("min").asLong(), a.get("max").asLong())) else None
-          active(path) = AddEntry(path, a.get("rows").asLong(), st)
-        }
-        if (node.has("remove")) active -= node.get("remove").get("path").asText()
-      }
-    }
-    active.values.toSeq
-  }
+  def activeAdds(version: Long): Seq[AddEntry] = state(version).adds
 
   /** RESTORE the table to the content (and schema) of `toVersion` as a
     * NEW commit — the Delta-style metadata-only rollback: no data file
@@ -188,8 +147,8 @@ final class VersionedTable private (val root: Path) {
   def restore(toVersion: Long, readVersion: Long): Long = {
     require(toVersion <= readVersion,
       s"restore target $toVersion is ahead of read version $readVersion")
-    val target = activeAdds(toVersion)
-    target.foreach { a =>
+    val target = state(toVersion)
+    target.adds.foreach { a =>
       // "fails loudly" must mean real content: a bare existence check
       // passes on a partially deleted directory and surfaces later as a
       // read error. Evidence = at least one parquet part file, or a
@@ -197,78 +156,40 @@ final class VersionedTable private (val root: Path) {
       val dir = root.resolve(a.path)
       val hasContent = Files.isDirectory(dir) && {
         val s = Files.list(dir)
-        try {
-          import scala.jdk.CollectionConverters._
-          s.iterator().asScala.exists { p =>
-            p.getFileName.toString.endsWith(".parquet") || Files.isDirectory(p)
-          }
+        try s.iterator().asScala.exists { p =>
+          p.getFileName.toString.endsWith(".parquet") || Files.isDirectory(p)
         } finally s.close()
       }
       require(hasContent,
         s"restore target ${a.path} was vacuumed or partially deleted; version $toVersion is unrecoverable")
     }
-    val current = activeFiles(readVersion).toSet
-    val targetPaths = target.map(_.path).toSet
-    val adds = target.filterNot(a => current.contains(a.path))
-    val removes = current.diff(targetPaths).toSeq
-    commit("restore", readVersion, adds, removes,
-      schemaJson = schemaOf(toVersion).map(_.json))
+    val current = state(readVersion).active
+    val adds = target.adds.filterNot(a => current.contains(a.path))
+    val removes = current.keys.filterNot(target.active.contains).toSeq
+    commit("restore", readVersion, adds, removes, schemaJson = target.schemaJson)
   }
 
-  /** Write a checkpoint of the CURRENT latest version's active-file list.
-    * Idempotent and crash-safe (tmp + atomic link; an existing checkpoint
-    * for the version is left alone). Checkpoints are pure accelerators:
-    * replay without them is always correct, so losing one costs time,
-    * never consistency.
+  /** Write a checkpoint of the CURRENT latest version: the commit that
+    * builds its state from nothing. Idempotent and crash-safe (tmp +
+    * atomic link; an existing checkpoint for the version is left alone).
+    * Checkpoints are pure accelerators: replay without them is always
+    * correct, so losing one costs time, never consistency.
     */
   def checkpoint(): Long = {
     val v = latestVersion
     require(v >= 0, "nothing to checkpoint")
     val target = logDir.resolve(checkpointFileName(v))
-    if (!Files.exists(target)) {
-      // stats ride the checkpoint too, so data-skipping reads share the
-      // O(tail) replay bound instead of re-walking the whole log
-      val entries = activeAdds(v).map { a =>
-        val r = if (a.rows >= 0) s""","rows":${a.rows}""" else ""
-        val st = a.stats.map { case (mn, mx) => s""","min":$mn,"max":$mx""" }.getOrElse("")
-        s"""{"path":${Mapper.writeValueAsString(a.path)}$r$st}"""
-      }
-      val tmp = logDir.resolve(s".tmp-cp-${UUID.randomUUID()}.json")
-      Files.writeString(tmp,
-        s"""{"version":$v,"active":[${entries.mkString(",")}]}""")
-      try Files.createLink(target, tmp)
+    if (!Files.exists(target))
+      try publish(target, encode(state(v).asCommit))
       catch { case _: FileAlreadyExistsException => () } // racer wrote it
-      finally Files.deleteIfExists(tmp)
-    }
     v
   }
 
-  /** The table schema AT `version`: the newest commit at or before it
-    * that recorded one (every data-writing commit does). Scanned
-    * newest-first so vacuum/checkpoint-obsoleted old log files are never
-    * needed. None only for pre-schema-logging tables (falls back to
-    * parquet self-description).
+  /** The table schema AT `version`: the newest one logged at or before
+    * it (every data-writing commit logs one). None only for
+    * pre-schema-logging tables (falls back to parquet self-description).
     */
-  def schemaOf(version: Long): Option[org.apache.spark.sql.types.StructType] = {
-    var v = version
-    while (v >= 0) {
-      val f = logDir.resolve(versionFileName(v))
-      if (Files.exists(f)) {
-        var found: Option[String] = None
-        Files.readAllLines(f).forEach { line =>
-          val node = Mapper.readTree(line)
-          if (node.has("commit") && node.get("commit").has("schema"))
-            found = Some(node.get("commit").get("schema").toString)
-        }
-        found.foreach { s =>
-          return Some(org.apache.spark.sql.types.DataType.fromJson(s)
-            .asInstanceOf[org.apache.spark.sql.types.StructType])
-        }
-      }
-      v -= 1
-    }
-    None
-  }
+  def schemaOf(version: Long): Option[StructType] = state(version).schema
 
   /** Snapshot read — latest version by default, `versionAsOf` for time
     * travel. The returned frame is pinned to the resolved file list:
@@ -286,45 +207,27 @@ final class VersionedTable private (val root: Path) {
   def snapshot(spark: SparkSession, versionAsOf: Option[Long] = None): DataFrame = {
     val v = versionAsOf.getOrElse(latestVersion)
     require(v >= 0, s"table at $root has no committed version")
-    val files = activeFiles(v)
-    require(files.nonEmpty, s"version $v of $root holds no data files")
-    val reader = schemaOf(v).fold(spark.read)(s => spark.read.schema(s))
-    reader.parquet(files.map(f => root.resolve(f).toString): _*)
+    snapshotOf(spark, state(v))
   }
+
+  private def snapshotOf(spark: SparkSession, s: TableState): DataFrame = {
+    require(s.active.nonEmpty, s"version ${s.version} of $root holds no data files")
+    read(spark, s, s.files)
+  }
+
+  /** `files` of state `s` under its LOGGED schema (see [[snapshot]]):
+    * which footers a read opens must not decide the result schema.
+    */
+  private def read(spark: SparkSession, s: TableState, files: Seq[String]): DataFrame =
+    s.schema.fold(spark.read)(sch => spark.read.schema(sch))
+      .parquet(files.map(f => root.resolve(f).toString): _*)
 
   /** Per-file stats recorded in the log for `version`:
     * path -> (min, max) of the table's stats column, absent for files
-    * committed without stats. Same O(tail) replay as activeFiles — the
-    * checkpoint carries the stats, and the tail replay is STRICT
-    * (missing tail log file = loud failure, never silently degraded
-    * pruning).
+    * committed without stats.
     */
-  def fileStats(version: Long): Map[String, (Long, Long)] = {
-    val stats = scala.collection.mutable.LinkedHashMap[String, (Long, Long)]()
-    val cp = latestCheckpointAtOrBefore(version)
-    if (cp >= 0) {
-      val node = Mapper.readTree(
-        Files.readString(logDir.resolve(checkpointFileName(cp))))
-      node.get("active").forEach { p =>
-        if (!p.isTextual && p.has("min") && p.has("max"))
-          stats(p.get("path").asText()) = (p.get("min").asLong(), p.get("max").asLong())
-      }
-    }
-    (cp + 1 to version).foreach { v =>
-      val f = logDir.resolve(versionFileName(v))
-      require(Files.exists(f), s"missing log version $v in $logDir")
-      Files.readAllLines(f).forEach { line =>
-        val node = Mapper.readTree(line)
-        if (node.has("add")) {
-          val a = node.get("add")
-          if (a.has("min") && a.has("max"))
-            stats(a.get("path").asText()) = (a.get("min").asLong(), a.get("max").asLong())
-        }
-        if (node.has("remove")) stats -= node.get("remove").get("path").asText()
-      }
-    }
-    stats.toMap
-  }
+  def fileStats(version: Long): Map[String, (Long, Long)] =
+    state(version).adds.flatMap(a => a.stats.map(a.path -> _)).toMap
 
   /** Data-skipping snapshot read: prune data files whose logged
     * [min, max] span of the stats column cannot intersect [lo, hi] —
@@ -343,39 +246,20 @@ final class VersionedTable private (val root: Path) {
     */
   def snapshotWhere(spark: SparkSession, lo: Long, hi: Long,
                     versionAsOf: Option[Long] = None): (DataFrame, Int, Int) = {
-    val statsCol = statsColumn.getOrElse(
-      throw new IllegalStateException(s"table at $root records no stats column"))
     val v = versionAsOf.getOrElse(latestVersion)
-    val files = activeFiles(v)
-    val stats = fileStats(v)
-    val kept = files.filter { f =>
-      stats.get(f).forall { case (mn, mx) => mx >= lo && mn <= hi }
-    }
+    val s = state(v)
+    val statsCol = s.statsCol.getOrElse(
+      throw new IllegalStateException(s"table at $root records no stats column"))
+    val kept = s.adds.filter(_.stats.forall { case (mn, mx) => mx >= lo && mn <= hi })
+      .map(_.path)
     require(kept.nonEmpty, s"no file of version $v can contain [$lo, $hi]")
-    // same logged-schema read discipline as snapshot(): which footers
-    // survive pruning must not decide the result schema
-    val reader = schemaOf(v).fold(spark.read)(sch => spark.read.schema(sch))
-    val df = reader.parquet(kept.map(f => root.resolve(f).toString): _*)
+    val df = read(spark, s, kept)
       .filter(org.apache.spark.sql.functions.col(statsCol).between(lo, hi))
-    (df, kept.length, files.length)
+    (df, kept.length, s.active.size)
   }
 
-  /** The column this table logs min/max stats for (from version 0's
-    * commit metadata), if any.
-    */
-  def statsColumn: Option[String] = {
-    val f = logDir.resolve(versionFileName(0L))
-    if (!Files.exists(f)) None
-    else {
-      var found: Option[String] = None
-      Files.readAllLines(f).forEach { line =>
-        val node = Mapper.readTree(line)
-        if (node.has("commit") && node.get("commit").has("statsCol"))
-          found = Some(node.get("commit").get("statsCol").asText())
-      }
-      found
-    }
-  }
+  /** The column this table logs min/max stats for, if any. */
+  def statsColumn: Option[String] = state(latestVersion).statsCol
 
   /** Write `df` as a fresh immutable data directory; returns the add
     * entry (path, rows, and — when the table logs a stats column — the
@@ -386,8 +270,7 @@ final class VersionedTable private (val root: Path) {
     * commit, if the write's metrics do not arrive: a row count is never
     * guessed.
     */
-  private def writeData(df: DataFrame,
-                        statsCol: Option[String] = statsColumn): AddEntry = {
+  private def writeData(df: DataFrame, statsCol: Option[String]): AddEntry = {
     import org.apache.spark.sql.Observation
     import org.apache.spark.sql.functions.{col, count, lit, max, min}
     val rel = s"data/${UUID.randomUUID()}"
@@ -405,6 +288,16 @@ final class VersionedTable private (val root: Path) {
       if (stats.isEmpty || r.isNullAt(1)) None else Some((r.getLong(1), r.getLong(2))))
   }
 
+  /** Publish `content` at `target`: written to a temp name, then
+    * hard-linked, which FAILS with FileAlreadyExistsException if the
+    * target exists — a log file is only ever observed complete.
+    */
+  private def publish(target: Path, content: String): Unit = {
+    val tmp = logDir.resolve(s".tmp-${UUID.randomUUID()}.json")
+    Files.writeString(tmp, content)
+    try Files.createLink(target, tmp) finally Files.deleteIfExists(tmp)
+  }
+
   /** Publish one commit targeting `readVersion + 1`.
     * @throws CommitConflictException if that version was taken first.
     */
@@ -413,36 +306,21 @@ final class VersionedTable private (val root: Path) {
              statsColMeta: Option[String] = None,
              schemaJson: Option[String] = None,
              txnId: Option[Long] = None,
-             constraintsJson: Option[String] = None): Long = {
+             constraints: Option[Seq[(String, String)]] = None): Long = {
     val version = readVersion + 1
-    val sb = new StringBuilder
-    def str(v: String) = Mapper.writeValueAsString(v)
-    val meta = statsColMeta.map(c => s""","statsCol":${str(c)}""").getOrElse("") +
-      schemaJson.map(j => s""","schema":$j""").getOrElse("") +
-      txnId.map(t => s""","txn":$t""").getOrElse("") +
-      constraintsJson.map(c => s""","constraints":$c""").getOrElse("")
-    sb.append(s"""{"commit":{"version":$version,"op":${str(op)},"readVersion":$readVersion$meta}}""")
-    adds.foreach { a =>
-      val st = a.stats.map { case (mn, mx) => s""","min":$mn,"max":$mx""" }.getOrElse("")
-      sb.append('\n').append(s"""{"add":{"path":${str(a.path)},"rows":${a.rows}$st}}""") }
-    removes.foreach { p =>
-      sb.append('\n').append(s"""{"remove":{"path":${str(p)}}}""") }
-    val tmp = logDir.resolve(s".tmp-${UUID.randomUUID()}.json")
-    Files.writeString(tmp, sb.toString)
-    val target = logDir.resolve(versionFileName(version))
-    try {
-      Files.createLink(target, tmp) // atomic publish + conflict check
-      // periodic checkpoint so reader replay stays O(interval); purely
-      // an accelerator, so best-effort is correct
-      if (version > 0 && version % CheckpointInterval == 0)
-        try checkpoint() catch { case NonFatal(_) => () }
-      version
-    } catch {
+    try publish(logDir.resolve(versionFileName(version)), encode(Commit(version, op,
+      readVersion, statsColMeta, schemaJson, txnId, constraints, adds, removes)))
+    catch {
       case _: FileAlreadyExistsException =>
         throw new CommitConflictException(
           s"version $version of $root was committed by another writer " +
             s"(this transaction read version $readVersion)")
-    } finally Files.deleteIfExists(tmp)
+    }
+    // periodic checkpoint so reader replay stays O(interval); purely
+    // an accelerator, so best-effort is correct
+    if (version > 0 && version % CheckpointInterval == 0)
+      try checkpoint() catch { case NonFatal(_) => () }
+    version
   }
 
   /** Blind append: conflict-free by construction (touches no existing
@@ -454,10 +332,10 @@ final class VersionedTable private (val root: Path) {
     // not even an orphan data file. Validation reads the entry-time
     // constraint set; a constraint added concurrently with this append
     // has the same write-write race Delta documents for its own path.
-    validateConstraints(df, latestVersion, "append")
-    val add = writeData(df)
-    var attempt = 0
-    while (true) {
+    val entry = state(latestVersion)
+    validateConstraints(df, entry.constraints, "append")
+    val add = writeData(df, entry.statsCol)
+    retrying(maxRetries) {
       // ONE latestVersion read per attempt, used for BOTH the schema
       // merge and the commit target: reading it twice would let a
       // foreign commit slip between the reads and this append succeed
@@ -468,17 +346,19 @@ final class VersionedTable private (val root: Path) {
       // schema is the previous schema plus any columns this batch
       // introduces — an append can widen the table, never narrow it).
       val rv = latestVersion
-      val schema = Some(evolvedSchema(df, rv))
-      try return commit("append", rv, Seq(add), Nil, schemaJson = schema,
-        txnId = txnId)
-      catch {
-        case e: CommitConflictException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
+      val s = if (rv == entry.version) entry else state(rv)
+      commit("append", rv, Seq(add), Nil,
+        schemaJson = Some(evolvedSchema(df, s.schema)), txnId = txnId)
     }
-    -1L // unreachable
   }
+
+  /** `attempt`, re-run after each lost commit race up to `retriesLeft`
+    * times; the last conflict propagates.
+    */
+  private def retrying(retriesLeft: Int)(attempt: => Long): Long =
+    try attempt catch {
+      case _: CommitConflictException if retriesLeft > 0 => retrying(retriesLeft - 1)(attempt)
+    }
 
   /** Replace the full table content (the rewriting commit class: a lost
     * race means the inputs changed, so the conflict PROPAGATES — the
@@ -486,11 +366,11 @@ final class VersionedTable private (val root: Path) {
     */
   def overwrite(df: DataFrame, readVersion: Long,
                 txnId: Option[Long] = None): Long = {
-    validateConstraints(df, readVersion, "overwrite")
-    val removed = activeFiles(readVersion)
-    val add = writeData(df)
+    val s = state(readVersion)
+    validateConstraints(df, s.constraints, "overwrite")
+    val add = writeData(df, s.statsCol)
     // a full replace REDEFINES the schema (it may drop columns)
-    commit("overwrite", readVersion, Seq(add), removed,
+    commit("overwrite", readVersion, Seq(add), s.files,
       schemaJson = Some(df.schema.json), txnId = txnId)
   }
 
@@ -499,35 +379,15 @@ final class VersionedTable private (val root: Path) {
     * audit) needs to apply exactly that commit's effect.
     */
   def commitInfo(version: Long): (String, Seq[AddEntry], Seq[String]) = {
-    val f = logDir.resolve(versionFileName(version))
-    require(Files.exists(f), s"missing log version $version in $logDir")
-    var op = "?"
-    val adds = scala.collection.mutable.ArrayBuffer[AddEntry]()
-    val removes = scala.collection.mutable.ArrayBuffer[String]()
-    Files.readAllLines(f).forEach { line =>
-      val node = Mapper.readTree(line)
-      if (node.has("commit")) op = node.get("commit").get("op").asText()
-      if (node.has("add")) {
-        val a = node.get("add")
-        val st = if (a.has("min") && a.has("max"))
-          Some((a.get("min").asLong(), a.get("max").asLong())) else None
-        adds += AddEntry(a.get("path").asText(), a.get("rows").asLong(), st)
-      }
-      if (node.has("remove")) removes += node.get("remove").get("path").asText()
-    }
-    (op, adds.toSeq, removes.toSeq)
+    val c = commitAt(logDir, version)
+    (c.op, c.adds, c.removes)
   }
 
-  /** Schema at `asOf` widened by any columns `df` introduces. */
-  private def evolvedSchema(df: DataFrame, asOf: Long): String = {
-    val merged = schemaOf(asOf) match {
-      case Some(p) =>
-        val extra = df.schema.fields.filterNot(f => p.fieldNames.contains(f.name))
-        org.apache.spark.sql.types.StructType(p.fields ++ extra)
-      case None => df.schema
-    }
-    merged.json
-  }
+  /** `prev` widened by any columns `df` introduces. */
+  private def evolvedSchema(df: DataFrame, prev: Option[StructType]): String =
+    prev.fold(df.schema) { p =>
+      StructType(p.fields ++ df.schema.fields.filterNot(f => p.fieldNames.contains(f.name)))
+    }.json
 
   /** MERGE INTO through the log: q62's co-partitioned full-outer merge
     * (graft.streaming.CdcApply.mergeBatch — update patches, delete wins,
@@ -536,14 +396,13 @@ final class VersionedTable private (val root: Path) {
     */
   def merge(spark: SparkSession, changes: DataFrame, readVersion: Long,
             txnId: Option[Long] = None): Long = {
-    val merged = graft.streaming.CdcApply.mergeBatch(
-      snapshot(spark, Some(readVersion)), changes)
+    val s = state(readVersion)
+    val merged = graft.streaming.CdcApply.mergeBatch(snapshotOf(spark, s), changes)
     // the merged RESULT is validated (deletes can't violate; updates and
     // inserts land in it), same point in the flow as Delta's merge check
-    validateConstraints(merged, readVersion, "merge")
-    val removed = activeFiles(readVersion)
-    val add = writeData(merged)
-    commit("merge", readVersion, Seq(add), removed,
+    validateConstraints(merged, s.constraints, "merge")
+    val add = writeData(merged, s.statsCol)
+    commit("merge", readVersion, Seq(add), s.files,
       schemaJson = Some(merged.schema.json), txnId = txnId)
   }
 
@@ -551,77 +410,33 @@ final class VersionedTable private (val root: Path) {
     * for at-least-once writers like foreachBatch: batch ids are
     * monotonic, so a batch ≤ this id was already applied and must be
     * skipped on replay — the public Delta txnAppId/txnVersion pattern).
-    * Scans newest→oldest and stops at the first commit carrying one.
     */
-  def lastTxnId: Option[Long] = {
-    var v = latestVersion
-    while (v >= 0) {
-      val f = logDir.resolve(versionFileName(v))
-      if (Files.exists(f)) {
-        var found: Option[Long] = None
-        Files.readAllLines(f).forEach { line =>
-          val node = Mapper.readTree(line)
-          if (node.has("commit") && node.get("commit").has("txn"))
-            found = Some(node.get("commit").get("txn").asLong())
-        }
-        if (found.isDefined) return found
-      }
-      v -= 1
-    }
-    None
-  }
+  def lastTxnId: Option[Long] = state(latestVersion).txn
 
   // ------------------------------------------------------------------
   // CHECK constraints (the Delta `ALTER TABLE ADD CONSTRAINT` surface):
   // declarative row predicates logged IN the commit log — every
-  // constraint-changing commit records the FULL active set (the schemaOf
-  // pattern), so the set at any version is the newest such commit at or
-  // before it, O(log tail) to resolve and time-travel-consistent. Writes
-  // validate the incoming batch BEFORE any data file is written, so a
-  // violation publishes nothing — not even an orphan file. SQL CHECK
-  // semantics: a NULL predicate passes.
+  // constraint-changing commit records the FULL active set (the schema
+  // pattern), and checkpoints carry it, so the set at any version is part
+  // of its state: O(log tail) to resolve and time-travel-consistent.
+  // Writes validate the incoming batch BEFORE any data file is written,
+  // so a violation publishes nothing — not even an orphan file. SQL
+  // CHECK semantics: a NULL predicate passes.
 
   /** Active CHECK constraints at `version`, newest-logged set wins. */
-  def constraintsOf(version: Long): Seq[(String, String)] = {
-    var v = version
-    while (v >= 0) {
-      val f = logDir.resolve(versionFileName(v))
-      if (Files.exists(f)) {
-        var found: Option[Seq[(String, String)]] = None
-        Files.readAllLines(f).forEach { line =>
-          val node = Mapper.readTree(line)
-          if (node.has("commit") && node.get("commit").has("constraints")) {
-            val arr = node.get("commit").get("constraints")
-            val b = Seq.newBuilder[(String, String)]
-            arr.forEach(el =>
-              b += ((el.get("name").asText(), el.get("expr").asText())))
-            found = Some(b.result())
-          }
-        }
-        found.foreach(cs => return cs)
-      }
-      v -= 1
-    }
-    Nil
-  }
+  def constraintsOf(version: Long): Seq[(String, String)] = state(version).constraints
 
   /** Active CHECK constraints of the latest version. */
   def checkConstraints: Seq[(String, String)] = constraintsOf(latestVersion)
 
-  private def constraintsToJson(cs: Seq[(String, String)]): String =
-    cs.map { case (n, e) =>
-      s"""{"name":${Mapper.writeValueAsString(n)},"expr":${Mapper.writeValueAsString(e)}}"""
-    }.mkString("[", ",", "]")
-
-  /** Throw [[ConstraintViolationException]] if `df` violates any of the
-    * active constraints at `version`. One combined pass over the batch
-    * when all pass (the common case); only a failure pays per-constraint
-    * re-evaluation to NAME the violated constraint in the error.
+  /** Throw [[ConstraintViolationException]] if `df` violates any of
+    * `cs`. One combined pass over the batch when all pass (the common
+    * case); only a failure pays per-constraint re-evaluation to NAME the
+    * violated constraint in the error.
     */
-  private[graft] def validateConstraints(df: DataFrame, version: Long,
-                                  op: String): Unit = {
+  private[graft] def validateConstraints(df: DataFrame, cs: Seq[(String, String)],
+                                         op: String): Unit = {
     import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
-    val cs = constraintsOf(version)
     if (cs.isEmpty) return
     def violated(e: String) = not(coalesce(expr(e), lit(true)))
     val anyBad = cs.map(c => violated(c._2)).reduce(_ || _)
@@ -642,44 +457,30 @@ final class VersionedTable private (val root: Path) {
   def addCheckConstraint(spark: SparkSession, name: String, exprStr: String,
                          maxRetries: Int = 5): Long = {
     import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
-    var attempt = 0
-    while (true) {
-      val rv = latestVersion
-      val existing = constraintsOf(rv)
-      require(!existing.exists(_._1 == name),
+    retrying(maxRetries) {
+      val s = state(latestVersion)
+      require(!s.constraints.exists(_._1 == name),
         s"constraint '$name' already exists on $root")
-      if (rv >= 0 &&
-          snapshot(spark, Some(rv))
+      if (s.version >= 0 &&
+          snapshotOf(spark, s)
             .where(not(coalesce(expr(exprStr), lit(true)))).take(1).nonEmpty)
         throw new ConstraintViolationException(
           s"cannot add CHECK constraint '$name' ($exprStr): " +
             s"existing rows of $root violate it")
-      try return commit("addConstraint", rv, Nil, Nil,
-        constraintsJson = Some(constraintsToJson(existing :+ (name, exprStr))))
-      catch {
-        case e: CommitConflictException =>
-          attempt += 1; if (attempt > maxRetries) throw e
-      }
+      commit("addConstraint", s.version, Nil, Nil,
+        constraints = Some(s.constraints :+ (name -> exprStr)))
     }
-    -1L // unreachable
   }
 
   /** Drop a named CHECK constraint (no-op validation; the set shrinks). */
   def dropCheckConstraint(name: String, maxRetries: Int = 5): Long = {
-    var attempt = 0
-    while (true) {
-      val rv = latestVersion
-      val existing = constraintsOf(rv)
-      require(existing.exists(_._1 == name),
+    retrying(maxRetries) {
+      val s = state(latestVersion)
+      require(s.constraints.exists(_._1 == name),
         s"constraint '$name' does not exist on $root")
-      try return commit("dropConstraint", rv, Nil, Nil,
-        constraintsJson = Some(constraintsToJson(existing.filterNot(_._1 == name))))
-      catch {
-        case e: CommitConflictException =>
-          attempt += 1; if (attempt > maxRetries) throw e
-      }
+      commit("dropConstraint", s.version, Nil, Nil,
+        constraints = Some(s.constraints.filterNot(_._1 == name)))
     }
-    -1L // unreachable
   }
 
   /** CHANGE DATA FEED between two versions, keyed by `keyCol`: what a
@@ -749,14 +550,6 @@ final class VersionedTable private (val root: Path) {
       .select(col(keyCol), col("_change_type"), col("_before"), col("_after"))
   }
 
-  /** Small-file compaction THROUGH the log (Delta OPTIMIZE's shape): the
-    * active files of `readVersion` are rewritten into ~`targetBytes`
-    * outputs and swapped in one rewriting commit that changes ZERO rows
-    * — readers of any version, before or after, see identical data;
-    * only the file layout (and scan cost) changes. Pairs with
-    * ops/Layout.compact, which documents why repartition (a shuffle)
-    * beats coalesce for uniform output sizes.
-    */
   /** DELETE WHERE through the log — the Delta delete algorithm with
     * file-level pruning: ONE distributed pass finds the files that
     * actually contain matching rows (`input_file_name` over the
@@ -775,36 +568,43 @@ final class VersionedTable private (val root: Path) {
   def deleteWhere(spark: SparkSession, predicate: String,
                   readVersion: Long): Long = {
     import org.apache.spark.sql.functions.{coalesce, expr, input_file_name, lit, not}
-    val snap = snapshot(spark, Some(readVersion))
+    val s = state(readVersion)
+    val snap = snapshotOf(spark, s)
     val touchedUris = snap.where(expr(predicate))
       .select(input_file_name()).distinct()
       .collect().map(_.getString(0)).toSet // bounded by |active files|
     if (touchedUris.isEmpty) return -1L
-    val touched = activeFiles(readVersion).filter { rel =>
+    val touched = s.files.filter { rel =>
       // the trailing "/" keeps __bucket=1 from matching __bucket=10's files
       touchedUris.exists(u => u.contains(rel + "/"))
     }
-    val reader = schemaOf(readVersion).fold(spark.read)(s => spark.read.schema(s))
-    val kept = reader
-      .parquet(touched.map(f => root.resolve(f).toString): _*)
+    val kept = read(spark, s, touched)
       // DELETE WHERE p removes rows where p is TRUE; NULL keeps the row
       .where(not(coalesce(expr(predicate), lit(false))))
-    val add = writeData(kept)
+    val add = writeData(kept, s.statsCol)
     commit("delete", readVersion, Seq(add), touched,
       schemaJson = Some(snap.schema.json))
   }
 
+  /** Small-file compaction THROUGH the log (Delta OPTIMIZE's shape): the
+    * active files of `readVersion` are rewritten into ~`targetBytes`
+    * outputs and swapped in one rewriting commit that changes ZERO rows
+    * — readers of any version, before or after, see identical data;
+    * only the file layout (and scan cost) changes. Pairs with
+    * ops/Layout.compact, which documents why repartition (a shuffle)
+    * beats coalesce for uniform output sizes.
+    */
   def compact(spark: SparkSession, targetBytes: Long, readVersion: Long): Long = {
-    val removed = activeFiles(readVersion)
-    val df = snapshot(spark, Some(readVersion))
+    val s = state(readVersion)
+    val df = snapshotOf(spark, s)
     val hconf = spark.sparkContext.hadoopConfiguration
     val totalBytes = df.inputFiles.map { f =>
       val p = new org.apache.hadoop.fs.Path(new java.net.URI(f))
       p.getFileSystem(hconf).getFileStatus(p).getLen
     }.sum
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    val add = writeData(df.repartition(nOut))
-    commit("compact", readVersion, Seq(add), removed,
+    val add = writeData(df.repartition(nOut), s.statsCol)
+    commit("compact", readVersion, Seq(add), s.files,
       schemaJson = Some(df.schema.json))
   }
 
@@ -829,8 +629,8 @@ final class VersionedTable private (val root: Path) {
                nBuckets: Int, readVersion: Long): Long = {
     import org.apache.spark.sql.functions._
     require(nBuckets >= 1, s"nBuckets must be >= 1, got $nBuckets")
-    val removed = activeFiles(readVersion)
-    val df = snapshot(spark, Some(readVersion))
+    val s = state(readVersion)
+    val df = snapshotOf(spark, s)
     val keyed = df.withColumn("__ck", clusterKey.cast("double"))
     val cuts: Seq[Double] =
       if (nBuckets == 1) Nil
@@ -846,7 +646,7 @@ final class VersionedTable private (val root: Path) {
     out.write.mode("errorifexists").partitionBy("__bucket")
       .parquet(root.resolve(rel).toString)
     // one aggregate yields every bucket's row count and stats span
-    val adds = (statsColumn match {
+    val adds = (s.statsCol match {
       case Some(c) =>
         out.groupBy(col("__bucket"))
           .agg(count(lit(1)), min(col(c)).cast("long"), max(col(c)).cast("long"))
@@ -857,7 +657,7 @@ final class VersionedTable private (val root: Path) {
         out.groupBy(col("__bucket")).agg(count(lit(1))).collect()
           .map(r => AddEntry(s"$rel/__bucket=${r.getInt(0)}", r.getLong(1), None))
     }).toSeq.sortBy(_.path)
-    commit("optimize", readVersion, adds, removed,
+    commit("optimize", readVersion, adds, s.files,
       schemaJson = Some(df.schema.json))
   }
 
@@ -872,13 +672,13 @@ final class VersionedTable private (val root: Path) {
     val latest = latestVersion
     require(horizon >= 0 && horizon <= latest,
       s"vacuum horizon $horizon outside [0, $latest]")
-    val referenced = (horizon to latest).flatMap(activeFiles).toSet
+    // one fold over [horizon, latest], not one replay per version
+    val referenced = states(horizon, latest).flatMap(_.files).toSet
     val dataDir = root.resolve("data")
     val cutoff = System.currentTimeMillis() - minAgeMs
     val all = Files.list(dataDir)
     val victims =
       try {
-        import scala.jdk.CollectionConverters._
         all.iterator().asScala
           // the age guard protects a CONCURRENT writer: its data dir is
           // on disk before its commit publishes, and deleting it would
@@ -898,15 +698,14 @@ final class VersionedTable private (val root: Path) {
     victims.foreach { rel =>
       // recursive: victims can themselves hold bucket subdirectories
       val walk = Files.walk(root.resolve(rel))
-      try {
-        import scala.jdk.CollectionConverters._
-        walk.sorted(java.util.Comparator.reverseOrder[Path]())
-          .iterator().asScala.foreach(Files.delete)
-      } finally walk.close()
+      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+        .iterator().asScala.foreach(Files.delete)
+      finally walk.close()
     }
     victims
   }
 }
+
 
 object VersionedTable {
   private[graft] val LogDirName = "_txn_log"
@@ -964,8 +763,134 @@ object VersionedTable {
     */
   final case class AddEntry(path: String, rows: Long, stats: Option[(Long, Long)])
 
+  /** One log file: a version's commit, or a checkpoint — the commit that
+    * builds state `version` from nothing. Metadata fields are None when
+    * the file does not log them; `constraints` is always the FULL set.
+    */
+  private[graft] final case class Commit(
+      version: Long, op: String, readVersion: Long,
+      statsCol: Option[String], schemaJson: Option[String], txn: Option[Long],
+      constraints: Option[Seq[(String, String)]],
+      adds: Seq[AddEntry], removes: Seq[String])
+
+  /** What the log says at one version: the active add entries in commit
+    * order, and the newest logged stats column, schema, CHECK constraint
+    * set and txn id.
+    */
+  private[graft] final case class TableState(
+      version: Long, active: VectorMap[String, AddEntry],
+      statsCol: Option[String], schemaJson: Option[String],
+      constraints: Seq[(String, String)], txn: Option[Long]) {
+
+    def files: Seq[String] = active.keys.toSeq
+    def adds: Seq[AddEntry] = active.values.toSeq
+    def schema: Option[StructType] =
+      schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType])
+
+    /** This state with `c` applied: its adds, then its removes; the
+      * metadata `c` logs replaces what came before.
+      */
+    def next(c: Commit): TableState = TableState(c.version,
+      c.adds.foldLeft(active)((m, a) => m.updated(a.path, a)) -- c.removes,
+      c.statsCol.orElse(statsCol), c.schemaJson.orElse(schemaJson),
+      c.constraints.getOrElse(constraints), c.txn.orElse(txn))
+
+    /** The checkpoint of this state: `Empty.next(asCommit) == this`. */
+    def asCommit: Commit = Commit(version, "checkpoint", -1L, statsCol,
+      schemaJson, txn, Some(constraints), adds, Nil)
+  }
+
+  private[graft] object TableState {
+    val Empty: TableState = TableState(-1L, VectorMap.empty, None, None, Nil, None)
+  }
+
+  /** Parse one log file — a version or a checkpoint — into its commit.
+    * The ONLY reader of the log format. None for a file without a commit
+    * line: the legacy single-object checkpoint, which is not read.
+    */
+  private def readLog(f: Path): Option[Commit] = {
+    var head: Option[JsonNode] = None
+    val adds = Seq.newBuilder[AddEntry]
+    val removes = Seq.newBuilder[String]
+    Files.readAllLines(f).forEach { line =>
+      val node = Mapper.readTree(line)
+      if (node.has("commit")) head = Some(node.get("commit"))
+      if (node.has("add")) {
+        val a = node.get("add")
+        val st = if (a.has("min") && a.has("max"))
+          Some((a.get("min").asLong(), a.get("max").asLong())) else None
+        adds += AddEntry(a.get("path").asText(), a.get("rows").asLong(), st)
+      }
+      if (node.has("remove")) removes += node.get("remove").get("path").asText()
+    }
+    head.map { c =>
+      def opt[T](k: String)(f: JsonNode => T) = Option(c.get(k)).map(f)
+      Commit(c.get("version").asLong(), c.get("op").asText(), c.get("readVersion").asLong(),
+        opt("statsCol")(_.asText()), opt("schema")(_.toString), opt("txn")(_.asLong()),
+        opt("constraints")(_.asScala.map(e => e.get("name").asText() -> e.get("expr").asText()).toSeq),
+        adds.result(), removes.result())
+    }
+  }
+
+  /** The commit of log version `v`; a missing version fails loudly. */
+  private[graft] def commitAt(logDir: Path, v: Long): Commit = {
+    val f = logDir.resolve(versionFileName(v))
+    require(Files.exists(f), s"missing log version $v in $logDir")
+    readLog(f).getOrElse(
+      throw new IllegalArgumentException(s"log version $v in $logDir has no commit line"))
+  }
+
+  /** The log format's ONLY writer: `c` as JSON lines — the commit line,
+    * then one line per add and per remove.
+    */
+  private def encode(c: Commit): String = {
+    val lines = Seq.newBuilder[ObjectNode]
+    def line(action: String): ObjectNode = {
+      val n = Mapper.createObjectNode()
+      lines += n
+      n.putObject(action)
+    }
+    val m = line("commit")
+      .put("version", c.version).put("op", c.op).put("readVersion", c.readVersion)
+    c.statsCol.foreach(m.put("statsCol", _))
+    // a Spark StructType's JSON, embedded as is
+    c.schemaJson.foreach(j => m.putRawValue("schema", new RawValue(j)))
+    c.txn.foreach(t => m.put("txn", t))
+    c.constraints.foreach { cs =>
+      val arr = m.putArray("constraints")
+      cs.foreach { case (n, e) => arr.addObject().put("name", n).put("expr", e) }
+    }
+    c.adds.foreach { a =>
+      val e = line("add").put("path", a.path).put("rows", a.rows)
+      a.stats.foreach { case (mn, mx) => e.put("min", mn).put("max", mx) }
+    }
+    c.removes.foreach(p => line("remove").put("path", p))
+    lines.result().map(Mapper.writeValueAsString).mkString("\n")
+  }
+
+  private val VersionFile = """(\d{20})\.json""".r
+  private val CheckpointFile = """(\d{20})\.checkpoint\.json""".r
+
   private def versionFileName(v: Long): String = f"$v%020d.json"
   private def checkpointFileName(v: Long): String = f"$v%020d.checkpoint.json"
+
+  private def logFileNames(logDir: Path): List[String] = {
+    val files = Files.list(logDir)
+    try files.iterator().asScala.map(_.getFileName.toString).toList
+    finally files.close()
+  }
+
+  /** Largest published version in `logDir`, or -1 for an empty log. Only
+    * fully-published version files count — a crashed writer's .tmp-*
+    * debris stays invisible to readers.
+    */
+  private[graft] def latestVersion(logDir: Path): Long =
+    logFileNames(logDir).collect { case VersionFile(v) => v.toLong }.foldLeft(-1L)(math.max)
+
+  /** Largest checkpointed version ≤ `version`, or -1 if none. */
+  private def latestCheckpoint(logDir: Path, version: Long): Long =
+    logFileNames(logDir).collect { case CheckpointFile(v) if v.toLong <= version => v.toLong }
+      .foldLeft(-1L)(math.max)
 
   /** Create a new table at `root` with `df` as version 0. `statsCol`
     * (an integral column) turns on per-file min/max stats in every

@@ -25,6 +25,16 @@ class TableSpec extends AnyFunSuite with SparkSessionTestWrapper {
   private def freshTable() =
     VersionedTable.create(graft.ops.Core.tmp("vt_spec"), base)
 
+  /** Every log-derived accessor at version `v`, plus the latest-version
+    * ones, to compare two reads of one log.
+    */
+  private def logView(t: VersionedTable, v: Long) =
+    (t.activeFiles(v), t.activeAdds(v), t.fileStats(v), t.schemaOf(v),
+      t.constraintsOf(v), t.statsColumn, t.lastTxnId, t.checkConstraints)
+
+  private def snapshotRows(t: VersionedTable, v: Long): Seq[String] =
+    t.snapshot(spark, Some(v)).collect().map(_.toString).sorted.toSeq
+
   /** Stage a change batch as a single parquet file in a CDC feed dir. */
   private def changeFile(df: org.apache.spark.sql.DataFrame,
                          outDir: String, name: String): Unit = {
@@ -261,33 +271,97 @@ class TableSpec extends AnyFunSuite with SparkSessionTestWrapper {
     import spark.implicits._
     val t = VersionedTable.create(graft.ops.Core.tmp("vt_cp_content"),
       base.filter($"c_custkey" < 50), statsCol = Some("c_custkey")) // v0
-    t.append(base.filter($"c_custkey" >= 50 && $"c_custkey" < 100)) // v1
+    t.append(base.filter($"c_custkey" >= 50 && $"c_custkey" < 100),
+      txnId = Some(1L)) // v1
     t.deleteWhere(spark, "c_custkey = 7", t.latestVersion) // v2 removes v0's file
     t.append(base.filter($"c_custkey" < 0)) // v3: empty, no stats
-    // the checkpoint as built from three separate replays of the log
-    def replayed(v: Long): String = {
-      val stats = t.fileStats(v)
-      val rows = t.activeAdds(v).map(a => a.path -> a.rows).toMap
-      val entries = t.activeFiles(v).map { f =>
-        val r = rows.get(f).filter(_ >= 0).map(n => s""","rows":$n""").getOrElse("")
-        stats.get(f) match {
-          case Some((mn, mx)) => s"""{"path":"$f"$r,"min":$mn,"max":$mx}"""
-          case None => s"""{"path":"$f"$r}"""
-        }
-      }
-      s"""{"version":$v,"active":[${entries.mkString(",")}]}"""
-    }
-    def written(v: Long): String = Files.readString(
-      t.root.resolve("_txn_log").resolve(f"$v%020d.checkpoint.json"))
-    val want3 = replayed(3L)
     assert(t.checkpoint() == 3L)
-    assert(written(3L) == want3)
     t.restore(toVersion = 1L, readVersion = 3L) // v4 re-adds v0's file
     t.append(base.filter($"c_custkey" >= 100)) // v5
-    val want5 = replayed(5L) // starts from the v3 checkpoint
-    assert(t.checkpoint() == 5L)
-    assert(written(5L) == want5)
+    assert(t.checkpoint() == 5L) // built from the v3 checkpoint plus the tail
     assert(t.activeAdds(5L).size == 3)
+
+    val log = t.root.resolve("_txn_log")
+    def cpFile(v: Long) = log.resolve(f"$v%020d.checkpoint.json")
+    def view(v: Long) = (logView(t, v), snapshotRows(t, v))
+    // a checkpoint is the commit that builds its state: one commit line,
+    // then one add line per active file
+    Seq(3L, 5L).foreach { v =>
+      val lines = Files.readAllLines(cpFile(v))
+      assert(lines.get(0).startsWith("""{"commit":{"version":""" + v))
+      assert(lines.size == 1 + t.activeAdds(v).size)
+    }
+    // read THROUGH the checkpoints: the log files they cover moved aside
+    val covered = (0L to 3L).map(v => log.resolve(f"$v%020d.json"))
+    covered.foreach(f => Files.move(f, f.resolveSibling(s"${f.getFileName}.aside")))
+    val through = Seq(3L, 5L).map(view)
+    covered.foreach(f => Files.move(f.resolveSibling(s"${f.getFileName}.aside"), f))
+    // ... and by replaying the whole log without them
+    Seq(3L, 5L).foreach(v => Files.delete(cpFile(v)))
+    assert(Seq(3L, 5L).map(view) == through)
+  }
+
+  test("a pruned log prefix keeps the stats column, constraints and txn cursor") {
+    import spark.implicits._
+    val t = VersionedTable.create(graft.ops.Core.tmp("vt_pruned"),
+      base.filter($"c_custkey" < 50), statsCol = Some("c_custkey")) // v0
+    t.addCheckConstraint(spark, "key_nonneg", "c_custkey >= 0") // v1
+    t.append(base.filter($"c_custkey" >= 50), txnId = Some(7L)) // v2
+    (3 to 11).foreach { i =>
+      t.append(base.limit(1).select($"c_custkey" + (900000 + i) as "c_custkey",
+        $"c_name", $"c_acctbal"))
+    }
+    val log = t.root.resolve("_txn_log")
+    assert(t.latestVersion == 11L)
+    assert(Files.exists(log.resolve(f"${10L}%020d.checkpoint.json")))
+    val before = (t.statsColumn, t.schemaOf(11L), t.constraintsOf(11L), t.lastTxnId)
+    assert(before._1.contains("c_custkey") && before._4.contains(7L))
+    assert(before._3 == Seq(("key_nonneg", "c_custkey >= 0")))
+
+    // no read or write at or after the checkpoint may open a file before it
+    (0L to 9L).foreach(v => Files.delete(log.resolve(f"$v%020d.json")))
+    assert((t.statsColumn, t.schemaOf(11L), t.constraintsOf(11L), t.lastTxnId) == before)
+
+    val filesBefore = t.activeFiles(11L)
+    intercept[ConstraintViolationException] {
+      t.append(Seq((-5L, "bad", 1.0)).toDF("c_custkey", "c_name", "c_acctbal"))
+    }
+    assert(t.latestVersion == 11L && t.activeFiles(11L) == filesBefore)
+
+    val (pruned, kept, total) = t.snapshotWhere(spark, lo = 1, hi = 20)
+    assert(kept == 1 && total == filesBefore.size)
+    assert(pruned.count() == base.filter($"c_custkey".between(1, 20)).count())
+
+    val upd = Seq((10L, "U", "renamed", 5.0)).toDF("c_custkey", "op", "new_name", "new_bal")
+    assert(t.merge(spark, upd, t.latestVersion, txnId = Some(8L)) == 12L)
+    assert(t.snapshot(spark).filter($"c_custkey" === 10L)
+      .select($"c_name").as[String].collect().toSeq == Seq("renamed"))
+    assert(t.lastTxnId.contains(8L) && t.constraintsOf(12L) == before._3)
+  }
+
+  test("legacy checkpoints are not read: every version reads as the log replays it") {
+    import spark.implicits._
+    val t = VersionedTable.create(graft.ops.Core.tmp("vt_legacy_cp"),
+      base.filter($"c_custkey" < 50), statsCol = Some("c_custkey")) // v0
+    t.append(base.filter($"c_custkey" >= 50 && $"c_custkey" < 100),
+      txnId = Some(3L)) // v1
+    t.addCheckConstraint(spark, "key_nonneg", "c_custkey >= 0") // v2
+    t.deleteWhere(spark, "c_custkey = 7", t.latestVersion) // v3
+    t.append(base.filter($"c_custkey" >= 100)) // v4
+    val log = t.root.resolve("_txn_log")
+    def cpFile(v: Long) = log.resolve(f"$v%020d.checkpoint.json")
+    def q(s: String) = "\"" + s + "\""
+    // the oldest form held bare paths; the next added rows and stats
+    Files.writeString(cpFile(2L),
+      s"""{"version":2,"active":[${t.activeFiles(2L).map(q).mkString(",")}]}""")
+    Files.writeString(cpFile(4L), s"""{"version":4,"active":[${t.activeAdds(4L).map { a =>
+      val st = a.stats.map { case (mn, mx) => s""","min":$mn,"max":$mx""" }.getOrElse("")
+      s"""{"path":${q(a.path)},"rows":${a.rows}$st}"""
+    }.mkString(",")}]}""")
+    def view(v: Long) = (logView(t, v), snapshotRows(t, v))
+    val withLegacy = (0L to 4L).map(view)
+    Seq(2L, 4L).foreach(v => Files.delete(cpFile(v)))
+    assert((0L to 4L).map(view) == withLegacy)
   }
 
   test("vacuum keeps a live optimized layout and reclaims a superseded one recursively") {

@@ -38,7 +38,7 @@ object Explain {
     "q97_pagerank_step",  // expect: broadcast degree attach + dst-aggregate; no window sort
     "q102_corr_subquery", // expect: decorrelated aggregate + equi-join, merged sum/count subqueries
     "q104_time_travel",   // expect: plain parquet scan over the pinned snapshot's file list
-    "q106_lateral_topn",  // expect: WindowGroupLimit Partial/Final + equi-join, no nested loop
+    "q106_lateral_topn",  // expect: partial+final TopKPerGroupExec + equi-join, no nested loop
     "q107_variant_props", // expect: parse_json once, variant_get projections, partial agg
     "q119_triangles",     // expect: equi-joins only below the 1-row stat crossJoins
     "q123_native_topk",   // expect: partial+final TopKPerGroupExec, no Window, no Sort

@@ -62,10 +62,10 @@ object GraftExtensions {
     // Whole-operator surface: the native grouped top-k (logical node +
     // strategy + heap-based physical operator, graft.plans.NativeTopK).
     // The rule turns the declarative row_number()<=k idiom into the
-    // custom node; the strategy plans it.
-    if (sys.env.get("GRAFT_DISABLE_NATIVE_TOPK").isEmpty) {
-      ext.injectOptimizerRule(_ => graft.plans.RewriteRankLimitToNativeTopK)
-      ext.injectPlannerStrategy(_ => graft.plans.NativeTopKStrategy)
-    }
+    // custom node; the strategy plans it. A session turns the rewrite off
+    // with spark.sql.optimizer.excludedRules=
+    // graft.plans.RewriteRankLimitToNativeTopK (the stock plan).
+    ext.injectOptimizerRule(_ => graft.plans.RewriteRankLimitToNativeTopK)
+    ext.injectPlannerStrategy(_ => graft.plans.NativeTopKStrategy)
   }
 }

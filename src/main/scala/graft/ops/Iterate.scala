@@ -71,21 +71,13 @@ private[graft] object Iterate {
     * rather than input row counts (r16 advisory: the former
     * 5M-row-count gates admitted ~160-480 MB builds). `rowBytes` is the
     * caller's per-entry estimate for the built relation (key + row +
-    * map overhead); the ceiling is deliberately well under driver/
-    * executor headroom and env-tunable for re-pairing
-    * (GRAFT_BCAST_CEILING, bytes).
+    * map overhead); the 128 MB ceiling is deliberately well under
+    * driver/executor headroom.
     */
-  val bcastCeiling: Long =
-    sys.env.get("GRAFT_BCAST_CEILING").map { v =>
-      try v.trim.toLong
-      catch { case _: NumberFormatException =>
-        throw new IllegalArgumentException(
-          s"GRAFT_BCAST_CEILING must be a byte count, got '$v'")
-      }
-    }.getOrElse(128L << 20)
+  val bcastCeiling: Long = 128L << 20
 
-  /** Effective ceiling: session conf override first (lets specs force
-    * the degraded path in-process), env/default second. */
+  /** Effective ceiling: the `graft.bcast.ceiling` session conf (lets
+    * specs force the degraded path in-process), else [[bcastCeiling]]. */
   def bcastCeilingOf(s: org.apache.spark.sql.SparkSession): Long =
     s.conf.getOption("graft.bcast.ceiling")
       .map(_.trim.toLong).getOrElse(bcastCeiling)

@@ -4814,7 +4814,7 @@ object Relational {
     // nodes ≤ nEdges (the frame is doubled), ~32 B/entry built
     // (long key + row + LongHashedRelation overhead). The old
     // nEdges ≤ 5M admitted ~160 MB builds; the 128 MB default ceiling
-    // tightens that and scales with GRAFT_BCAST_CEILING instead of a
+    // tightens that and scales with Iterate.bcastCeilingOf instead of a
     // magic count. Past the ceiling the hint drops away and the joins
     // run as shuffle semi-joins on the node key (PlanGuardsSpec pins
     // the degraded shape).

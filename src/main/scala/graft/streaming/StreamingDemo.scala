@@ -218,26 +218,3 @@ object StreamStreamJoin {
       .orderBy("p_id", "v_id")
   }
 }
-
-/** Standalone driver: `sbt "runMain graft.streaming.StreamingDemoRunner [sfDir]"`. */
-object StreamingDemoRunner {
-  def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .withExtensions(graft.functions.GraftExtensions.inject)
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val out = StreamingDemo.hourlyCounts(spark, dir)
-    println(s"[streaming-demo] windows=${out.count()}")
-    out.show(10, truncate = false)
-    val sessions = StatefulSessionizer.sessionize(spark, dir, "runner_sessions")
-    println(s"[streaming-demo] closed sessions=${sessions.count()}")
-    sessions.show(5, truncate = false)
-    spark.stop()
-  }
-}

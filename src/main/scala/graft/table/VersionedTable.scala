@@ -1,7 +1,7 @@
 package graft.table
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths}
 import java.util.UUID
@@ -56,6 +56,10 @@ class ConstraintViolationException(msg: String) extends RuntimeException(msg)
   * checkpoint carries the whole state — files with rows and stats,
   * schema, stats column, CHECK constraints and txn cursor — so no read
   * or write at or after a checkpoint opens a log file before it.
+  *
+  * The logged schema is the schema a snapshot returns: every field (array
+  * elements and map values too) is logged nullable, as Spark's parquet
+  * source reads it back, whatever nullability the written frame declared.
   *
   * The contract, and how each piece is achieved on a filesystem:
   *
@@ -434,8 +438,8 @@ final class VersionedTable private (val root: Path) {
     * case); only a failure pays per-constraint re-evaluation to NAME the
     * violated constraint in the error.
     */
-  private[graft] def validateConstraints(df: DataFrame, cs: Seq[(String, String)],
-                                         op: String): Unit = {
+  private def validateConstraints(df: DataFrame, cs: Seq[(String, String)],
+                                 op: String): Unit = {
     import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
     if (cs.isEmpty) return
     def violated(e: String) = not(coalesce(expr(e), lit(true)))
@@ -853,8 +857,9 @@ object VersionedTable {
     val m = line("commit")
       .put("version", c.version).put("op", c.op).put("readVersion", c.readVersion)
     c.statsCol.foreach(m.put("statsCol", _))
-    // a Spark StructType's JSON, embedded as is
-    c.schemaJson.foreach(j => m.putRawValue("schema", new RawValue(j)))
+    // a Spark StructType's JSON, embedded with every field nullable
+    c.schemaJson.foreach(j =>
+      m.putRawValue("schema", new RawValue(nullable(DataType.fromJson(j)).json)))
     c.txn.foreach(t => m.put("txn", t))
     c.constraints.foreach { cs =>
       val arr = m.putArray("constraints")
@@ -866,6 +871,18 @@ object VersionedTable {
     }
     c.removes.foreach(p => line("remove").put("path", p))
     lines.result().map(Mapper.writeValueAsString).mkString("\n")
+  }
+
+  /** `t` with every field, array element and map value nullable: the
+    * schema Spark's parquet source reads back (its own `asNullable` is not
+    * public), so a logged schema never rejects a null a snapshot can hold.
+    */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType =>
+      new StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
   }
 
   private val VersionFile = """(\d{20})\.json""".r

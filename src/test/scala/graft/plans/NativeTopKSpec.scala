@@ -127,4 +127,16 @@ class NativeTopKSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(ranked.queryExecution.sparkPlan.collect { case t: TopKPerGroupExec => t }.isEmpty,
       "rank() must not rewrite (ties admit > k rows)")
   }
+
+  test("excluding the rewrite rule per session plans the stock window and returns the same rows") {
+    import spark.implicits._
+    def rows = topk(3).orderBy($"c_nationkey", $"c_acctbal".desc, $"c_custkey").collect().toSeq
+    val native = rows
+    spark.conf.set("spark.sql.optimizer.excludedRules", "graft.plans.RewriteRankLimitToNativeTopK")
+    try {
+      val p = topk(3).queryExecution.sparkPlan
+      assert(p.collect { case t: TopKPerGroupExec => t }.isEmpty, s"rule not excluded:\n$p")
+      assert(rows == native)
+    } finally spark.conf.unset("spark.sql.optimizer.excludedRules")
+  }
 }

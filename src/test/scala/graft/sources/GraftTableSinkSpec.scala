@@ -6,10 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSessionTestWrapper
 import graft.table.{ConstraintViolationException, VersionedTable}
 
-/** The DSv2 WRITE connector's transactional contract: parallel per-task
-  * parquet files published as one atomic log commit, lakehouse write
-  * semantics (append/overwrite), constraint enforcement before
-  * visibility, and loud failure outside the supported type mapping.
+/** The DSv2 WRITE connector's transactional contract: each write is one
+  * `VersionedTable` append or overwrite published as one atomic log
+  * commit, constraint enforcement before visibility, and Spark's by-name
+  * resolution rejecting an incompatible frame before any task runs.
   */
 class GraftTableSinkSpec extends AnyFunSuite with SparkSessionTestWrapper {
   private val dir = "/root/testdata/sf0.001"
@@ -101,17 +101,50 @@ class GraftTableSinkSpec extends AnyFunSuite with SparkSessionTestWrapper {
     import spark.implicits._
     val root = graft.ops.Core.tmp("vt_sink_stats")
     val t = VersionedTable.create(root, base, statsCol = Some("c_custkey"))
+    val before = t.activeFiles(t.latestVersion).toSet
     Seq((700001L, "hi", 1.0), (700009L, "hi2", 2.0))
       .toDF("c_custkey", "c_name", "c_acctbal")
       .coalesce(1)
       .write.format("graft-table").mode("append").save(root)
-    val stats = t.fileStats(t.latestVersion)
-    val newFile = stats.keys.find(_.contains("dsv2-"))
-    assert(newFile.isDefined, "connector file must carry stats")
-    assert(stats(newFile.get) == (700001L, 700009L))
+    val newFiles = t.activeFiles(t.latestVersion).filterNot(before)
+    assert(newFiles.size == 1, s"one connector write, one add entry: $newFiles")
+    assert(t.fileStats(t.latestVersion).get(newFiles.head) == Some((700001L, 700009L)),
+      "connector file must carry stats")
     // skipping proof: a probe outside the new file's range never lists it
     val (pruned, kept, total) = t.snapshotWhere(spark, 1L, 10L)
     assert(kept < total, "the out-of-range connector file must be pruned")
     assert(pruned.filter($"c_name".startsWith("hi")).count() == 0)
+  }
+
+  test("an empty connector append commits one version whose add has 0 rows") {
+    val root = graft.ops.Core.tmp("vt_sink_empty")
+    val t = VersionedTable.create(root, base)
+    val v0 = t.latestVersion
+    val n0 = t.snapshot(spark).count()
+
+    base.limit(0).write.format("graft-table").mode("append").save(root)
+
+    assert(t.latestVersion == v0 + 1, "an empty append commits, as VersionedTable.append does")
+    val (op, adds, removes) = t.commitInfo(v0 + 1)
+    assert(op == "append" && removes.isEmpty)
+    assert(adds.map(_.rows) == Seq(0L))
+    assert(t.snapshot(spark).count() == n0)
+  }
+
+  test("array and decimal columns: the connector writes every type append writes") {
+    import spark.implicits._
+    val root = graft.ops.Core.tmp("vt_sink_nested")
+    def frame(rows: (Long, Seq[String], String)*) = rows.toDF("id", "tags", "amount")
+      .select($"id", $"tags", $"amount".cast("decimal(12,2)").as("amount"))
+    val t = VersionedTable.create(root, frame((1L, Seq("a", "b"), "10.25")))
+
+    frame((2L, Seq("c"), "-3.50"), (3L, Nil, "0.01"))
+      .write.format("graft-table").mode("append").save(root)
+
+    assert(t.latestVersion == 1L)
+    val got = t.snapshot(spark).orderBy("id").collect().toSeq
+      .map(r => (r.getLong(0), r.getSeq[String](1), r.getDecimal(2).toPlainString))
+    assert(got == Seq((1L, Seq("a", "b"), "10.25"), (2L, Seq("c"), "-3.50"), (3L, Nil, "0.01")))
+    assert(t.snapshot(spark).schema("amount").dataType.simpleString == "decimal(12,2)")
   }
 }

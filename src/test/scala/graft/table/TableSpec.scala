@@ -968,4 +968,35 @@ class TableSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(t.checkpoint() == v)
     assert(t.activeFiles(v) == Seq(t.activeFiles(v - 1).last, path))
   }
+
+  test("the logged schema is the snapshot's schema after every write path") {
+    import spark.implicits._
+    val root = graft.ops.Core.tmp("vt_nullable")
+    // tuples of primitives: Spark declares c_custkey and c_acctbal NOT NULL
+    val nonNull = Seq((1L, "a", 1.0), (2L, "b", 2.0)).toDF("c_custkey", "c_name", "c_acctbal")
+    assert(!nonNull.schema("c_custkey").nullable && !nonNull.schema("c_acctbal").nullable)
+    val t = VersionedTable.create(root, nonNull)
+    def logsSnapshotSchema(after: String): Unit = {
+      val v = t.latestVersion
+      assert(t.schemaOf(v) == Some(t.snapshot(spark, Some(v)).schema), s"after $after")
+    }
+    logsSnapshotSchema("create")
+    Seq((3L, "c", 3.0)).toDF("c_custkey", "c_name", "c_acctbal")
+      .write.format("graft-table").mode("append").save(root)
+    logsSnapshotSchema("connector append")
+    nonNull.write.format("graft-table").mode("overwrite").save(root)
+    logsSnapshotSchema("connector overwrite")
+    t.merge(spark, Seq((1L, "U", "renamed", 5.0)).toDF("c_custkey", "op", "new_name", "new_bal"),
+      t.latestVersion)
+    logsSnapshotSchema("merge")
+
+    // the connector resolves against the logged schema: a null the
+    // snapshot can hold is a null the connector accepts
+    val v = t.latestVersion
+    Seq((4L, "d", Option.empty[Double])).toDF("c_custkey", "c_name", "c_acctbal")
+      .write.format("graft-table").mode("append").save(root)
+    assert(t.latestVersion == v + 1)
+    assert(t.snapshot(spark).filter($"c_acctbal".isNull).select($"c_custkey").as[Long]
+      .collect().toSeq == Seq(4L))
+  }
 }

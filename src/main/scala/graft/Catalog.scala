@@ -14,8 +14,8 @@ import org.apache.spark.sql.SparkSession
   * replace), session-scoped, and does NOT require the session to have
   * been built with `GraftExtensions` — although building with the
   * extension (or `spark.sql.extensions=graft.functions.GraftExtensions`)
-  * additionally enables the optimizer rules (`RewriteZipEqCount`,
-  * `RewriteRankLimitToNativeTopK`), which plain function registration
+  * additionally enables the optimizer rule
+  * `RewriteRankLimitToNativeTopK`, which plain function registration
   * cannot inject.
   */
 object Catalog {

@@ -54,11 +54,6 @@ object GraftExtensions {
       ext.injectFunction((FunctionIdentifier(name),
         new ExpressionInfo(getClass.getName, name), builder))
     }
-    // Plan-rewrite surface: accelerate the declarative signature-match
-    // idiom (see RewriteZipEqCount) for every session built with the
-    // extension. Runs in the user-provided optimizer batch, after
-    // Catalyst's own.
-    ext.injectOptimizerRule(_ => RewriteZipEqCount)
     // Whole-operator surface: the native grouped top-k (logical node +
     // strategy + heap-based physical operator, graft.plans.NativeTopK).
     // The rule turns the declarative row_number()<=k idiom into the

@@ -1,10 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, BinaryExpression, EqualTo, Expression, LambdaFunction, NamedLambdaVariable, Size, ZipWith}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
@@ -58,38 +56,5 @@ object ZipEqCount {
       i += 1
     }
     c
-  }
-}
-
-/** Optimizer rule: recognize the declarative signature-agreement idiom
-  * and replace it with the fused native expression. Queries stay
-  * written against PUBLIC built-in functions — `size(filter(zip_with(
-  * a, b, (x,y) -> x=y), v -> v))` — and the extension accelerates the
-  * plan underneath, the same contract a storage/compute vendor's Spark
-  * extension ships. Injected via
-  * `SparkSessionExtensions.injectOptimizerRule` (GraftExtensions), so
-  * it composes with Catalyst's own batches and applies to any session
-  * built with the extension, including `spark.sql` text queries.
-  *
-  * The match is deliberately narrow: both lambdas must be pure variable
-  * references (the equality over exactly the two zipped slots; the
-  * filter an identity), and both inputs long arrays — anything else
-  * keeps the built-in semantics untouched.
-  */
-object RewriteZipEqCount extends Rule[LogicalPlan] {
-  private def isLongArray(e: Expression): Boolean = e.dataType match {
-    case ArrayType(LongType, _) => true
-    case _ => false
-  }
-
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformAllExpressions {
-    case Size(ArrayFilter(ZipWith(l, r, LambdaFunction(
-            EqualTo(x: NamedLambdaVariable, y: NamedLambdaVariable),
-            Seq(ax: NamedLambdaVariable, ay: NamedLambdaVariable), _)),
-          LambdaFunction(idBody: NamedLambdaVariable,
-            Seq(idArg: NamedLambdaVariable), _)), _)
-        if x.exprId == ax.exprId && y.exprId == ay.exprId &&
-          idBody.exprId == idArg.exprId && isLongArray(l) && isLongArray(r) =>
-      ZipEqCount(l, r)
   }
 }

@@ -686,10 +686,11 @@ object Layout {
   // change keys range-join against BROADCAST footer ranges to pick the
   // affected files (metadata-sized work), only those files' rows are
   // re-read (the scan's `files` option) and rewritten through the q62
-  // full-outer change algebra, and the commit moves uid-named files in,
-  // drops the replaced ones, and journals the delta once
-  // (ColumnarSourceSpec pins the exactly-once journal append and that
-  // unaffected files survive byte-identical). Oracle: the q105 change
+  // full-outer change algebra, and the commit moves uid-named files in
+  // and swaps them for the replaced ones in one snapshot version
+  // (ColumnarSourceSpec pins that the version adds exactly the published
+  // files and that unaffected files survive byte-identical; the
+  // replaced files stay on disk until vacuum). Oracle: the q105 change
   // algebra in pure SQL over the parquet twin — a storage-level merge
   // must equal the logical merge exactly. Determinism: bal + 100.0 is
   // one exact IEEE add on both engines (q105 precedent); no other
@@ -706,8 +707,8 @@ object Layout {
   /** Events in graft-columnar with a REPLAYED duplicate wave: arrival 1
     * is the full table, arrival 2 re-appends every event_id % 5 == 0 row
     * (an at-least-once upstream retrying — the duplication pattern
-    * `dropDuplicatesWithinWatermark` exists for). The journal orders
-    * the two arrivals for the streaming read.
+    * `dropDuplicatesWithinWatermark` exists for). Each arrival is one
+    * snapshot version, which orders them for the streaming read.
     */
   private[graft] def ensureGcolDupEvents(s: SparkSession, dir: String): String =
     gcolDupEventsOnce.getOrElseUpdate(dir, {
@@ -722,9 +723,10 @@ object Layout {
     })
 
   // q330: STREAMING DEDUPLICATION, live — the row itself runs a real
-  // micro-batch query: readStream over the gcol journal (arrival 1 =
-  // all events, arrival 2 = an at-least-once replay of every 5th event),
-  // `withWatermark(ts) + dropDuplicatesWithinWatermark(event_id)`, the
+  // micro-batch query: readStream over the gcol snapshot versions
+  // (arrival 1 = all events, arrival 2 = an at-least-once replay of
+  // every 5th event), `withWatermark(ts) +
+  // dropDuplicatesWithinWatermark(event_id)`, the
   // state-bounded streaming twin of exact dedup q20/q78. Survivors land
   // in a scratch parquet via foreachBatch and the returned frame is
   // their per-day census (count + exact event_id checksum — the
@@ -829,8 +831,9 @@ object Layout {
   // arbitrary-state API no input row can drive: a session closes on
   // INACTIVITY, so the emit happens in handleExpiredTimer when the
   // WATERMARK passes `session end + 30 min`, not when data arrives.
-  // The row runs the real micro-batch query over the gcol journal
-  // (events + a sentinel closing tick) and returns every closed session
+  // The row runs the real micro-batch query over the gcol snapshot
+  // versions (events + a sentinel closing tick) and returns every
+  // closed session
   // (user, start, end, event count). Oracle: the classic lag/gap-break
   // sessionization in SQL — timer-closed streaming sessions must equal
   // the batch gap algorithm exactly. Determinism: epoch-micro integers
@@ -1108,7 +1111,7 @@ object Layout {
   // which column the lookups would hit, and re-ingesting 100 TB to gain
   // an index is not a plan. The op decodes only the indexed column,
   // one task per file, truncates the old footer off and appends one
-  // carrying the blooms — file names unchanged (journal unaffected),
+  // carrying the blooms — file names unchanged (snapshots unaffected),
   // data segments byte-identical, idempotent on re-run (spec pins all
   // three plus the lookup pruning going green). Oracle: the identical
   // IN-lookup over the parquet twin — an index must change no row.
@@ -1226,9 +1229,9 @@ object Layout {
 
   private val gcolSnapOnce = scala.collection.concurrent.TrieMap[String, String]()
 
-  /** Customer in graft-columnar with SNAPSHOT COMMITS enabled, then the
-    * q329 change classes merged: v1 = the original table, v2 = the
-    * merged state; the replaced files stay on disk backing v1.
+  /** Customer in graft-columnar, then the q329 change classes merged:
+    * v1 = the original table, v2 = the merged state; the replaced files
+    * stay on disk backing v1.
     */
   private[graft] def ensureGcolSnapshots(s: SparkSession, dir: String): String =
     gcolSnapOnce.getOrElseUpdate(dir, {
@@ -1240,7 +1243,6 @@ object Layout {
         .sortWithinPartitions("c_custkey")
         .write.format("graft-columnar").option("rowsPerBlock", "2048")
         .mode("overwrite").save(out)
-      graft.sources.GcolSnapshots.enable(out)
       val changes = base.filter($"c_custkey" % 10 === 0)
         .select($"c_custkey", lit("U").as("op"),
           lit(null).cast(StringType).as("new_name"),
@@ -1262,11 +1264,11 @@ object Layout {
 
   // q340: SNAPSHOT COMMITS + TIME TRAVEL on graft-columnar — the
   // metadata-pointer commit model (GcolSnapshots; Delta/Iceberg's
-  // answer to the one hole a directory-listing read path cannot close:
-  // a reader racing a CoW publish seeing rewritten rows twice). Opt-in
-  // per table: every commit writes `_gcol_snapshots/v{N}.json` and
-  // atomically swaps the `_gcol_head` pointer LAST; replaced files are
-  // KEPT on disk, so concurrent readers plan from the old version or
+  // answer to a reader racing a CoW publish and seeing rewritten rows
+  // twice). Every commit of every gcol table writes
+  // `_gcol_snapshots/v{N}.json` and atomically swaps the `_gcol_head`
+  // pointer LAST; replaced files are KEPT on disk until vacuum, so
+  // concurrent readers plan from the old version or
   // the new one, never a mix, and `option("asOf", N)` reproduces any
   // retained version exactly — the reproducible-training-run audit
   // surface. vacuum() is the explicit GC (reading a vacuumed version
@@ -1296,7 +1298,7 @@ object Layout {
 
   private val gcolIncrOnce = scala.collection.concurrent.TrieMap[String, String]()
 
-  /** Snapshot-enabled customer table with two APPEND commits after the
+  /** Customer table with two APPEND commits after the
     * base: v1 = base, v2 = +2e9-shifted batch (bal + 10), v3 =
     * +3e9-shifted batch (bal + 25) — the append-mostly ingest shape
     * whose increments are exactly the added files.
@@ -1307,7 +1309,6 @@ object Layout {
       val out = Core.tmp("graft_gcol_incr")
       val base = Tables.customer(s, dir).select($"c_custkey", $"c_acctbal")
       base.write.format("graft-columnar").mode("overwrite").save(out)
-      graft.sources.GcolSnapshots.enable(out)
       base.select(($"c_custkey" + 2000000000L).as("c_custkey"),
           ($"c_acctbal" + 10.0).as("c_acctbal"))
         .write.format("graft-columnar").mode("append").save(out)
@@ -1321,7 +1322,7 @@ object Layout {
   // (GcolSnapshots.addedFiles): an incremental consumer that has
   // processed version N reads ONLY the files later commits added
   // (`option("files", addedFiles(N, head))`), O(delta) instead of
-  // O(table) — the batch-side twin of the streaming journal, and the
+  // O(table) — the batch-side twin of the streaming read, and the
   // shape every nightly ingest/dedup pipeline wants ("process what
   // arrived since my last run", the Delta CDF idea at file grain; for
   // CoW rewrites the added files also carry surviving rewritten rows —
@@ -1347,8 +1348,8 @@ object Layout {
   private val gcolCompactOnce = scala.collection.concurrent.TrieMap[String, String]()
 
   /** Customer sprayed into 64 tiny gcol files (the streaming-sink
-    * small-file pathology), snapshot-enabled, then bin-packed by
-    * GcolRowOps.compactFiles — published atomically via the head swap.
+    * small-file pathology), then bin-packed by GcolRowOps.compactFiles
+    * — published atomically via the head swap.
     */
   private[graft] def ensureGcolCompacted(s: SparkSession, dir: String): String =
     gcolCompactOnce.getOrElseUpdate(dir, {
@@ -1357,7 +1358,6 @@ object Layout {
       Tables.customer(s, dir).select($"c_custkey", $"c_name", $"c_acctbal")
         .repartition(64)
         .write.format("graft-columnar").mode("overwrite").save(out)
-      graft.sources.GcolSnapshots.enable(out)
       graft.sources.GcolRowOps.compactFiles(s, out,
         targetBytes = 8L * 1024 * 1024)
       out
@@ -1372,8 +1372,8 @@ object Layout {
   // `files`-scoped scan + one shuffle, preserves codec/clusterBy/
   // bucketSpec (clustered tables keep their storage-partitioned
   // joins), refuses while position sidecars are pending, and publishes
-  // through the shared CoW tail — on snapshot tables the head-pointer
-  // swap makes the layout change ATOMIC to readers, with the
+  // through the shared CoW tail — the head-pointer swap makes the
+  // layout change ATOMIC to readers, with the
   // pre-compaction version still time-travelable. Oracle: the plain
   // customer census — compaction must not change one bit. Spec pins
   // the file-count collapse, content equality, snapshot atomicity and

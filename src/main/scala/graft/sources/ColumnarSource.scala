@@ -63,8 +63,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *     first blocks; ORDER BY col LIMIT n excludes any block that
   *     provably cannot reach the top n (blocks whose max sits below
   *     its min already hold >= n rows). Both partial and filter-safe.
-  *   - '''Micro-batch streaming''' — `readStream` over a commit-ordered
-  *     journal, exactly-once from a checkpoint.
+  *   - '''Snapshot commits''' — every write commits the next version
+  *     of the snapshot log (GcolSnapshots), the one record of the
+  *     table's live files: readers plan from the head, never from a
+  *     directory listing, `asOf` reads an older version, and a failed
+  *     write publishes nothing.
+  *   - '''Micro-batch streaming''' — `readStream` with snapshot
+  *     versions as offsets, exactly-once from a checkpoint.
   *
   * File layout (`*.gcol`, one file per write task, little-endian):
   * {{{
@@ -179,11 +184,11 @@ private[sources] class GcolTable(dir: String, tblSchema: StructType,
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new GcolScanBuilder(dir, tblSchema,
       // `files`: comma-separated RELATIVE names restricting the scan to a
-      // subset of the directory's data files — the hook GcolRowOps uses
+      // subset of the head snapshot's data files — the hook GcolRowOps uses
       // to rewrite ONLY the copy-on-write-affected files
       Option(options.get("files")).map(_.split(',').map(_.trim)
         .filter(_.nonEmpty).toSet),
-      // `asOf`: TIME TRAVEL on a snapshot-enabled table (GcolSnapshots)
+      // `asOf`: TIME TRAVEL through the snapshot log (GcolSnapshots)
       // — plan any retained version's file set instead of the head;
       // the catalog's `VERSION AS OF` pins it at the table level
       Option(options.get("asOf")).map(_.trim.toLong).orElse(asOfTable))
@@ -782,17 +787,15 @@ class GcolScan private[sources] (
   override def createReaderFactory(): PartitionReaderFactory =
     GcolReaderFactory
 
-  /** Streaming surface: offsets count lines of the commit-ordered
-    * journal `_gcol_journal` (directory names don't encode arrival
-    * order; the writer's driver-side commit does). A batch (s, e]
-    * reads exactly journal lines s..e-1 — immutable files, so replay
-    * from a checkpoint is exactly-once, the TableLogSource contract.
-    * The stream prunes each batch's blocks with whatever filters the
-    * ScanBuilder received — but Spark 4 applies V2 pushdown to BATCH
-    * relations only, so today that array is empty on the streaming
-    * path and filtering runs above the scan (behavior pinned in
-    * ColumnarSourceSpec so an engine upgrade that starts pushing gets
-    * noticed and the zone maps light up for free).
+  /** Streaming surface: offsets are snapshot versions (GcolSnapshots),
+    * so a batch (s, e] reads the files versions s+1..e added — immutable
+    * files, so replay from a checkpoint is exactly-once, the
+    * TableLogSource contract. The stream prunes each batch's blocks with
+    * whatever filters the ScanBuilder received — but Spark 4 applies V2
+    * pushdown to BATCH relations only, so today that array is empty on
+    * the streaming path and filtering runs above the scan (behavior
+    * pinned in ColumnarSourceSpec so an engine upgrade that starts
+    * pushing gets noticed and the zone maps light up for free).
     */
   override def toMicroBatchStream(
       checkpointLocation: String): org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
@@ -992,9 +995,9 @@ private[sources] class GcolWriteBuilder(dir: String, schema: StructType,
   }
 }
 
-/** Tasks stream into a staging subdir; the driver MOVES survivors into
-  * the root on commit (and deletes pre-existing files first on
-  * overwrite), so a failed job leaves the directory readable.
+/** Tasks stream into a staging subdir; on commit the driver MOVES the
+  * survivors into the root and commits the next snapshot (GcolSnapshots)
+  * naming them, so a failed job or a failed commit publishes nothing.
   */
 private[sources] class GcolBatchWrite(dir: String, schema: StructType,
                                       rowsPerBlock: Int, replace: Boolean,
@@ -1016,57 +1019,27 @@ private[sources] class GcolBatchWrite(dir: String, schema: StructType,
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val root = Paths.get(dir)
-    Files.createDirectories(root)
-    // snapshot-enabled tables (GcolSnapshots): REPLACED files are kept
-    // on disk — in-flight readers planning from the old head still find
-    // them, and they back time travel; vacuum() reclaims them
-    val snapHead = GcolSnapshots.headVersion(dir)
-    if (replace) {
-      if (snapHead.isEmpty)
-        ColumnarFormat.listFiles(dir).foreach(Files.deleteIfExists)
-      Files.deleteIfExists(root.resolve(ColumnarFormat.JournalName))
-    }
-    // publish all-or-nothing: a failed move UNWINDS the files already
-    // moved (they were never journaled, so nothing observed them as
-    // committed) instead of leaving a partially-published directory
+    val head = GcolSnapshots.headVersion(dir)
+    // all-or-nothing: until the head moves no reader sees the moved
+    // files, so a failed move or commit UNWINDS them; an overwrite's
+    // replaced files stay on disk for readers of older versions
     val moved = scala.collection.mutable.ArrayBuffer.empty[Path]
-    val committed = try {
-      messages.collect {
+    try {
+      val committed = messages.toSeq.collect {
         case GcolFileCommitted(rel) if rel.nonEmpty =>
-          val src = root.resolve(staging).resolve(rel)
           val dst = root.resolve(rel)
-          Files.move(src, dst)
+          Files.move(root.resolve(staging).resolve(rel), dst)
           moved += dst
           rel
       }
+      val base =
+        if (replace) Nil else head.fold(Seq.empty[String])(GcolSnapshots.files(dir, _))
+      GcolSnapshots.commit(dir, base ++ committed, expectedHead = head)
     } catch {
       case t: Throwable =>
         moved.foreach(Files.deleteIfExists)
-        cleanupStaging()
         throw t
-    }
-    // commit-ordered journal: one line per published file, appended
-    // atomically per logical write — the streaming read's offset axis
-    // (sorted directory names don't encode arrival order; this does)
-    // the POINTER SWAP is the commit on snapshot tables: readers see
-    // the previous version or this one, never a mix. It runs BEFORE
-    // the journal append: the micro-batch planner skips journaled
-    // files outside the head live-set, so journal-first would open a
-    // window where a stream plans the new entry, finds it not yet
-    // live, and checkpoints past it — permanently losing the rows.
-    // Snapshot-first means a journal entry is live the moment a
-    // stream can see it.
-    snapHead.foreach { h =>
-      val base = if (replace) Nil else GcolSnapshots.files(dir, h)
-      GcolSnapshots.commit(dir, base ++ committed, expectedHead = Some(h))
-    }
-    if (committed.nonEmpty)
-      Files.write(root.resolve(ColumnarFormat.JournalName),
-        committed.sorted.mkString("", "\n", "\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-    cleanupStaging()
+    } finally cleanupStaging()
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
@@ -1190,7 +1163,7 @@ private[sources] class GcolDataWriter(dir: String, staging: String,
 // the format itself
 // ---------------------------------------------------------------------
 
-/** File-count offset over the commit journal. */
+/** Snapshot-version offset (GcolSnapshots): 0 is the empty table. */
 private[sources] case class GcolOffset(n: Long)
     extends org.apache.spark.sql.connector.read.streaming.Offset {
   override def json(): String = n.toString
@@ -1203,48 +1176,44 @@ private[sources] class GcolMicroBatchStream(
 
   override def initialOffset(): Offset = GcolOffset(0L)
   override def latestOffset(): Offset =
-    GcolOffset(ColumnarFormat.journal(dir).size.toLong)
+    GcolOffset(GcolSnapshots.headVersion(dir).getOrElse(0L))
   override def deserializeOffset(json: String): Offset =
     GcolOffset(json.toLong)
 
+  /** Batch (s, e] reads the files versions s+1..e added that the head
+    * still holds, in version order and then name order. A file a later
+    * copy-on-write rewrite replaced is skipped: its surviving rows
+    * arrive with the rewrite's version (the Delta `ignoreChanges`
+    * contract — rows already delivered are never taken back, and a
+    * stream from 0 gets the head state once).
+    */
   override def planInputPartitions(start: Offset,
                                    end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[GcolOffset].n.toInt
-    val e = end.asInstanceOf[GcolOffset].n.toInt
-    val files = ColumnarFormat.journal(dir).slice(s, e)
+    val s = start.asInstanceOf[GcolOffset].n
+    val e = end.asInstanceOf[GcolOffset].n
+    if (e <= s) return Array.empty
+    val live = GcolSnapshots.headFiles(dir).toSet
+    val added = GcolSnapshots.addedFiles(dir, s, e).filter(live.contains)
+    // each file sorts under the first retained version in (s, e] holding it
+    val firstSeen: Map[String, Long] = GcolSnapshots.retainedVersions(dir)
+      .filter(v => v > s && v <= e).reverse
+      .flatMap(v => GcolSnapshots.files(dir, v).map(_ -> v)).toMap
+    val ordered = added.sortBy(n => (firstSeen(n), n))
     val lin = ColumnarFormat.lineage(dir)
     val evolved = ColumnarFormat.readSchemaState(dir).isDefined
-    // snapshot tables KEEP replaced files on disk (time travel), so
-    // existence alone no longer proves liveness — restrict to the head
-    // snapshot's set, keeping replay semantics identical to the
-    // deleted-file skip below (ignoreChanges: the rewrite's files were
-    // re-journaled later in the log)
-    val live: Option[Set[String]] =
-      GcolSnapshots.headFiles(dir).map(_.toSet)
-    val all = scala.collection.mutable.ArrayBuffer.empty[GcolBlockPartition]
-    files.foreach { rel =>
+    ordered.flatMap { rel =>
       val f = Paths.get(dir).resolve(rel)
-      // A journaled file may have been REPLACED by a copy-on-write
-      // rewrite (GcolRowOps.merge/compact) and deleted — its surviving
-      // rows were re-journaled under the rewrite's new names later in
-      // the log. Skipping it keeps exactly-once replay ALIVE across a
-      // rewrite (the Delta `ignoreChanges` contract: already-delivered
-      // rows are never retracted; a reader starting from offset 0 gets
-      // the post-rewrite state from the re-journaled files) instead of
-      // crashing every checkpoint whose range spans the rewrite.
-      if (Files.exists(f) && live.forall(_.contains(rel))) {
-        val footer = ColumnarFormat.readFooter(f)
-        val descs = footer.blocks.zipWithIndex.flatMap { case (blk, bi) =>
-          if (filters.forall(ColumnarFormat.mayMatch(footer.schema, blk, _)))
-            Some(ColumnarFormat.blockDesc(f, footer, blk, bi, required, lin,
-              evolved))
-          else None
-        }
-        if (descs.nonEmpty) // one task per journal file: batch-local unit
-          all += GcolBlockPartition(descs.toArray, required.json)
+      val footer = ColumnarFormat.readFooter(f)
+      val descs = footer.blocks.zipWithIndex.flatMap { case (blk, bi) =>
+        if (filters.forall(ColumnarFormat.mayMatch(footer.schema, blk, _)))
+          Some(ColumnarFormat.blockDesc(f, footer, blk, bi, required, lin,
+            evolved))
+        else None
       }
-    }
-    all.toArray[InputPartition]
+      // one task per file: the batch-local unit
+      if (descs.isEmpty) None
+      else Some(GcolBlockPartition(descs.toArray, required.json))
+    }.toArray[InputPartition]
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -1256,7 +1225,6 @@ private[sources] class GcolMicroBatchStream(
 object ColumnarFormat {
   val DefaultRowsPerBlock = 16384
   val Magic: Long = 0x47434F4C464D5431L // "GCOLFMT1"
-  val JournalName = "_gcol_journal"
 
   // ---- schema evolution (GcolSchemaOps writes, every reader resolves) --
   //
@@ -1279,7 +1247,7 @@ object ColumnarFormat {
     */
   def tableSchema(dir: String): StructType =
     readSchemaState(dir).map(_._1).getOrElse {
-      val files = scopedFiles(dir, None) // snapshot head when enabled
+      val files = scopedFiles(dir, None)
       require(files.nonEmpty, s"no .gcol files under $dir")
       readFooter(files.head).schema
     }
@@ -1536,28 +1504,21 @@ object ColumnarFormat {
     case _ => StructField(name, IntegerType, nullable = false)
   }
 
-  /** The scan's file universe: the HEAD SNAPSHOT when the table routes
-    * commits through GcolSnapshots (readers then never race a publish:
-    * the pointer swap is atomic and replaced files stay on disk), a
-    * retained older snapshot under `asOf`, else the directory listing;
-    * optionally narrowed to the `files` option's named subset
+  /** The scan's file universe: the head snapshot, or a retained older
+    * snapshot under `asOf` (GcolSnapshots; readers never race a
+    * publish: the pointer swap is atomic and replaced files stay on
+    * disk); optionally narrowed to the `files` option's named subset
     * (GcolRowOps' copy-on-write rewrite hook).
     */
   def scopedFiles(dir: String, only: Option[Set[String]],
                   asOf: Option[Long] = None): Seq[Path] = {
-    val all: Seq[Path] = asOf match {
-      case Some(v) =>
-        GcolSnapshots.files(dir, v).map(n => Paths.get(dir).resolve(n))
-      case None => GcolSnapshots.headFiles(dir) match {
-        case Some(names) => names.map(n => Paths.get(dir).resolve(n))
-        case None => listFiles(dir)
-      }
-    }
+    val names = asOf.fold(GcolSnapshots.headFiles(dir))(GcolSnapshots.files(dir, _))
+    val all = names.map(n => Paths.get(dir).resolve(n))
     only match {
-      case Some(names) =>
-        val sel = all.filter(f => names.contains(f.getFileName.toString))
-        require(sel.size == names.size,
-          s"files option names ${names.size} files, found ${sel.size} in $dir")
+      case Some(subset) =>
+        val sel = all.filter(f => subset.contains(f.getFileName.toString))
+        require(sel.size == subset.size,
+          s"files option names ${subset.size} files, found ${sel.size} in $dir")
         sel
       case None => all
     }
@@ -1618,14 +1579,6 @@ object ColumnarFormat {
       case (AggMax(_, dt), i) => StructField(s"agg_$i", dt, nullable = true)
     })
 
-  /** Committed file names in commit order (the streaming offset axis). */
-  def journal(dir: String): Seq[String] = {
-    val j = Paths.get(dir).resolve(JournalName)
-    if (!Files.exists(j)) return Nil
-    import scala.jdk.CollectionConverters._
-    Files.readAllLines(j).asScala.toSeq.filter(_.nonEmpty)
-  }
-
   case class ColMeta(off: Long, len: Long, nullCount: Int,
                      min: Option[Any], max: Option[Any],
                      raw: Long = -1L, enc: String = "plain",
@@ -1685,6 +1638,9 @@ object ColumnarFormat {
         "timestamp, timestamp_ntz, double, string")
   }
 
+  /** Every `.gcol` file in `dir`, live or not: what GcolSnapshots.vacuum
+    * sweeps. Reads plan from [[scopedFiles]], never from this listing.
+    */
   def listFiles(dir: String): Seq[Path] = {
     val d = Paths.get(dir)
     if (!Files.isDirectory(d)) return Nil

@@ -62,23 +62,23 @@ class GcolCatalog extends TableCatalog with FunctionCatalog {
 
   override def loadTable(ident: Identifier): Table = {
     val dir = dirOf(ident)
-    if (ColumnarFormat.listFiles(dir).isEmpty)
+    if (!tableExists(ident))
       throw new NoSuchTableException(ident)
     new GcolTable(dir, ColumnarFormat.tableSchema(dir))
   }
 
   override def tableExists(ident: Identifier): Boolean =
-    ColumnarFormat.listFiles(dirOf(ident)).nonEmpty
+    GcolSnapshots.headFiles(dirOf(ident)).nonEmpty
 
   override def listTables(namespace: Array[String]): Array[Identifier] =
     Array.empty // path-addressed: there is no namespace to enumerate
 
-  /** SQL time travel: `VERSION AS OF n` on a snapshot-enabled table
+  /** SQL time travel: `VERSION AS OF n` through the snapshot log
     * (GcolSnapshots) — the catalog twin of `option("asOf", n)`.
     */
   override def loadTable(ident: Identifier, version: String): Table = {
     val dir = dirOf(ident)
-    if (ColumnarFormat.listFiles(dir).isEmpty)
+    if (!tableExists(ident))
       throw new NoSuchTableException(ident)
     val v = try version.trim.toLong catch {
       case _: NumberFormatException => throw new IllegalArgumentException(
@@ -106,7 +106,7 @@ class GcolCatalog extends TableCatalog with FunctionCatalog {
     */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
     val dir = dirOf(ident)
-    if (ColumnarFormat.listFiles(dir).isEmpty)
+    if (!tableExists(ident))
       throw new NoSuchTableException(ident)
     changes.foreach {
       case a: TableChange.AddColumn =>

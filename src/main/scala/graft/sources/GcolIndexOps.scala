@@ -17,17 +17,18 @@ import org.apache.spark.sql.types._
   * block (bounded memory: one segment at a time through the normal
   * decode path), build the bloom bits, then truncate the old footer off
   * and append the new one. Data segments are byte-identical (spec-
-  * pinned); file NAMES are unchanged, so the streaming journal and any
-  * `files`-scoped readers are unaffected.
+  * pinned); file NAMES are unchanged, so snapshots, streaming offsets
+  * and any `files`-scoped readers are unaffected. Only the head
+  * snapshot's files are indexed.
   *
   * Scale shape: the work is one column-scoped scan of the indexed
   * columns (the same bytes a query on them would read), parallelized
   * one task per file across the cluster; footer growth is 1 byte/row
-  * per indexed column. Crash caveat, documented like the CoW publish
-  * race: the truncate+append is NOT atomic — a crash mid-footer leaves
-  * that one file unreadable until the op is re-run (single-writer
-  * maintenance contract; the clean fix is the same manifest/snapshot
-  * commit model the row ops point at).
+  * per indexed column. Crash caveat: the footer rewrite happens IN
+  * PLACE, outside the snapshot log — the truncate+append is NOT atomic,
+  * so a crash mid-footer leaves that one file unreadable until the op
+  * is re-run (single-writer maintenance contract; the clean fix is to
+  * write new files and commit them as a snapshot, as the row ops do).
   */
 object GcolIndexOps {
 
@@ -49,7 +50,7 @@ object GcolIndexOps {
         f.get.dataType.simpleString)
     }
     val lin = ColumnarFormat.lineage(dir)
-    val files = ColumnarFormat.listFiles(dir).map(_.toString)
+    val files = ColumnarFormat.scopedFiles(dir, None).map(_.toString)
     if (files.isEmpty) return
     // one task per file: the decode + footer rewrite is file-local work
     spark.sparkContext.parallelize(files, files.size)

@@ -36,30 +36,31 @@ import org.apache.spark.sql.types._
   *      A key in an unaffected file would contradict its zone map, so
   *      joining changes against only the affected rows is complete.
   *   3. '''Publish''' — new files MOVE into the table (names carry the
-  *      job uid, collision-free), replaced files are deleted, and the
-  *      journal appends the new names once. Batch readers see the new
-  *      state; a STREAMING reader over the journal sees rewritten files
-  *      as fresh arrivals (the Delta `ignoreChanges` contract — CoW
-  *      cannot retract already-delivered rows from an append log).
-  *      Single-writer contract, like the format's overwrite path; the
-  *      transactional multi-writer story lives in VersionedTable.
+  *      job uid, collision-free) and one snapshot commit (GcolSnapshots)
+  *      swaps the replaced files for them: readers plan from the old
+  *      version or the new one, never a mix, and the replaced files stay
+  *      on disk for them and for time travel until `vacuum`. A STREAMING
+  *      reader sees the rewritten files as fresh arrivals of the new
+  *      version (the Delta `ignoreChanges` contract — CoW cannot retract
+  *      already-delivered rows). Single-writer contract, like the
+  *      format's overwrite path; the transactional multi-writer story
+  *      lives in VersionedTable.
   */
 object GcolRowOps {
 
   /** MERGE `changes` into the gcol table at `dir`; returns the relative
-    * names of the files the commit published (exactly the journal
-    * delta, which ColumnarSourceSpec pins as exactly-once).
+    * names of the files the commit published (exactly the files the new
+    * snapshot version adds).
     */
   def merge(spark: SparkSession, dir: String, changes: DataFrame,
             key: String, patch: Map[String, String]): Seq[String] = {
-    // the table's CURRENT file universe: the head snapshot when the
-    // table routes commits through GcolSnapshots, else the directory
+    // the table's CURRENT file universe: the head snapshot
     val all = ColumnarFormat.scopedFiles(dir, None)
     require(all.nonEmpty, s"no gcol table at $dir")
-    require(ColumnarFormat.listFiles(posDeletesDir(dir)).isEmpty,
+    require(isEmpty(posDeletesDir(dir)),
       "pending position deletes: a rewrite would invalidate their row " +
         s"addresses — apply them first (GcolRowOps.compactPos($dir))")
-    require(ColumnarFormat.listFiles(posUpsertsDir(dir)).isEmpty,
+    require(isEmpty(posUpsertsDir(dir)),
       "pending position-update rows: a rewrite would not carry them — " +
         s"apply them first (GcolRowOps.compactPos($dir))")
     val headFooter = ColumnarFormat.readFooter(all.head)
@@ -158,54 +159,23 @@ object GcolRowOps {
       merged.write.format("graft-columnar").mode("overwrite"), dir, headFooter)
     w3.save(scratch)
 
-    // 3) publish. Two postures:
-    //    - SNAPSHOT tables (GcolSnapshots.enabled): move new files in,
-    //      journal, then swap the head POINTER atomically with replaced
-    //      files KEPT on disk — concurrent readers plan from the old or
-    //      new snapshot, never a mix (the Delta/Iceberg commit model;
-    //      vacuum() reclaims the replaced files).
-    //    - directory-listing tables: move new files in, DELETE the
-    //      replaced ones, journal once. KNOWN READER RACE (single-
-    //      WRITER contract, documented): a batch scan listing the
-    //      directory between the moves and the deletes sees rewritten
-    //      rows TWICE. Move-first is kept deliberately — the inverse
-    //      order turns a crash mid-publish into permanent data loss.
-    //      Tables that cannot tolerate the window should enable
-    //      snapshots; that IS the clean fix.
+    // 3) publish: one snapshot commit swaps the affected files out
     publish(dir, scratch, affected)
   }
 
-  /** Shared CoW publish tail: move scratch files in, journal, and
-    * either snapshot-commit (replaced files kept) or delete the
-    * replaced files (listing tables). Returns the published names.
+  /** Shared CoW publish tail: move the scratch table's files in and
+    * commit the next snapshot with them in place of `affected` (which
+    * stay on disk for older versions). Returns the published names.
     */
   private def publish(dir: String, scratch: String,
                       affected: Seq[String]): Seq[String] = {
     val root = Paths.get(dir)
-    val snapHead = GcolSnapshots.headVersion(dir)
-    val newRel = ColumnarFormat.listFiles(scratch).map { src =>
-      val rel = src.getFileName.toString
-      Files.move(src, root.resolve(rel))
-      rel
-    }
-    // snapshot swap BEFORE the journal append (same ordering as the
-    // batch writer's commit): the micro-batch planner skips journaled
-    // files outside the head live-set, so a stream planning between a
-    // journal-first append and the head swap would checkpoint past the
-    // new files and lose their rows permanently
-    snapHead.foreach { h =>
-      val base = GcolSnapshots.files(dir, h)
-        .filterNot(affected.contains)
-      GcolSnapshots.commit(dir, base ++ newRel, expectedHead = Some(h))
-    }
-    if (newRel.nonEmpty)
-      Files.write(root.resolve(ColumnarFormat.JournalName),
-        newRel.sorted.mkString("", "\n", "\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-    if (snapHead.isEmpty)
-      affected.foreach(n => Files.deleteIfExists(root.resolve(n)))
+    val head = GcolSnapshots.headVersion(dir)
+    val newRel = GcolSnapshots.headFiles(scratch)
+    newRel.foreach(rel => Files.move(Paths.get(scratch).resolve(rel), root.resolve(rel)))
+    val base = head.fold(Seq.empty[String])(GcolSnapshots.files(dir, _))
+      .filterNot(affected.contains)
+    GcolSnapshots.commit(dir, base ++ newRel, expectedHead = head)
     deleteDirQuiet(Paths.get(scratch))
     newRel
   }
@@ -223,8 +193,8 @@ object GcolRowOps {
   }
 
   /** Merge-on-read sidecar: deleted KEYS live under `_gcol_deletes/`
-    * (itself a gcol table, invisible to the main scan — listFiles only
-    * sees the table directory's own `*.gcol`). The MoR trade vs
+    * (itself a gcol table, invisible to the main scan — its files are in
+    * no snapshot of the table). The MoR trade vs
     * [[merge]]'s copy-on-write is Iceberg v2's: a delete WRITES only
     * the churn-sized key list (no data file rewritten), and every READ
     * pays a key anti-join until [[compact]] folds the sidecar back in
@@ -251,7 +221,7 @@ object GcolRowOps {
   /** MoR READ: the table minus the sidecar keys (left anti join). */
   def readMoR(spark: SparkSession, dir: String, key: String): DataFrame = {
     val data = spark.read.format("graft-columnar").load(dir)
-    if (ColumnarFormat.listFiles(deletesDir(dir)).isEmpty) data
+    if (isEmpty(deletesDir(dir))) data
     else data.join(
       spark.read.format("graft-columnar").load(deletesDir(dir))
         .select(col(key)).distinct(),
@@ -313,8 +283,7 @@ object GcolRowOps {
     */
   def updateWherePos(spark: SparkSession, dir: String, predicate: String,
                      set: Map[String, String]): Unit = {
-    require(ColumnarFormat.listFiles(posDeletesDir(dir)).isEmpty &&
-      ColumnarFormat.listFiles(posUpsertsDir(dir)).isEmpty,
+    require(isEmpty(posDeletesDir(dir)) && isEmpty(posUpsertsDir(dir)),
       "pending position deletes/updates: compactPos first — patch " +
         "expressions evaluate against base rows, so batches must not stack")
     val schema = ColumnarFormat.tableSchema(dir)
@@ -349,13 +318,13 @@ object GcolRowOps {
     val data = spark.read.format("graft-columnar").load(dir)
     val dataCols = data.columns.toSeq
     val base =
-      if (ColumnarFormat.listFiles(posDeletesDir(dir)).isEmpty) data
+      if (isEmpty(posDeletesDir(dir))) data
       else data.select((dataCols ++ addr).map(col): _*)
         .join(spark.read.format("graft-columnar").load(posDeletesDir(dir))
           .select(addr.map(col): _*).distinct(),
           addr, "left_anti")
         .select(dataCols.map(col): _*)
-    if (ColumnarFormat.listFiles(posUpsertsDir(dir)).isEmpty) base
+    if (isEmpty(posUpsertsDir(dir))) base
     else base.unionAll(
       spark.read.format("graft-columnar").load(posUpsertsDir(dir))
         .select(dataCols.map(col): _*))
@@ -366,8 +335,7 @@ object GcolRowOps {
     * scan equals the MoR read, and reads stop paying the anti-join.
     */
   def compact(spark: SparkSession, dir: String, key: String): Seq[String] = {
-    val dels = ColumnarFormat.listFiles(deletesDir(dir))
-    if (dels.isEmpty) return Nil
+    if (isEmpty(deletesDir(dir))) return Nil
     val changes = spark.read.format("graft-columnar").load(deletesDir(dir))
       .select(col(key)).distinct().withColumn("op", lit("D"))
     val published = merge(spark, dir, changes, key, Map.empty)
@@ -377,13 +345,13 @@ object GcolRowOps {
 
   /** Fold the POSITION sidecars in: rewrite exactly the addressed files
     * without the addressed rows, publish, append the pending UPDATE
-    * replacements through the normal writer (which journals them), and
+    * replacements through the normal writer (which commits them), and
     * clear both sidecars. After this, plain == MoR-pos and
     * [[merge]]/[[compact]] are unblocked.
     */
   def compactPos(spark: SparkSession, dir: String): Seq[String] = {
-    val hasDels = ColumnarFormat.listFiles(posDeletesDir(dir)).nonEmpty
-    val hasUps = ColumnarFormat.listFiles(posUpsertsDir(dir)).nonEmpty
+    val hasDels = !isEmpty(posDeletesDir(dir))
+    val hasUps = !isEmpty(posUpsertsDir(dir))
     if (!hasDels && !hasUps) return Nil
     val headFooter = ColumnarFormat.readFooter(
       ColumnarFormat.scopedFiles(dir, None).head)
@@ -406,7 +374,7 @@ object GcolRowOps {
     }
     if (hasUps) {
       // the patched replacement rows land as a NORMAL append: the
-      // writer keeps the table's codec/clusterBy layout and journals
+      // writer keeps the table's codec/clusterBy layout and commits
       // the new files itself
       val schema = ColumnarFormat.tableSchema(dir)
       val ups = spark.read.format("graft-columnar").load(posUpsertsDir(dir))
@@ -425,9 +393,9 @@ object GcolRowOps {
     * chore of every streaming/over-parallel ingest (thousands of
     * KB-sized files whose per-file footer/open cost comes to dominate
     * scans; the gcol twin of Layout.compact's parquet version, but
-    * published ATOMICALLY through the shared CoW publish: on snapshot
-    * tables readers flip from the old file set to the compacted one at
-    * the head-pointer swap, and the layout knobs (codec, clusterBy,
+    * published ATOMICALLY through the shared CoW publish: readers flip
+    * from the old file set to the compacted one at the head-pointer
+    * swap, and the layout knobs (codec, clusterBy,
     * bucketSpec) are preserved so clustered tables keep their
     * storage-partitioned joins. Files already at/above `smallBytes`
     * are left byte-identical. Refuses while position sidecars are
@@ -441,8 +409,7 @@ object GcolRowOps {
   def compactFiles(spark: SparkSession, dir: String,
                    targetBytes: Long = 128L * 1024 * 1024,
                    smallBytes: Long = -1L): Seq[String] = {
-    require(ColumnarFormat.listFiles(posDeletesDir(dir)).isEmpty &&
-      ColumnarFormat.listFiles(posUpsertsDir(dir)).isEmpty,
+    require(isEmpty(posDeletesDir(dir)) && isEmpty(posUpsertsDir(dir)),
       "pending position deletes/updates: compactPos first — a rewrite " +
         "would invalidate their row addresses")
     val threshold = if (smallBytes > 0) smallBytes else targetBytes / 2
@@ -486,10 +453,16 @@ object GcolRowOps {
     else w3.option("codec", headFooter.codec)
   }
 
+  /** Whether the gcol table at `dir` (a sidecar or scratch table) holds
+    * no live file — also true before its first commit.
+    */
+  private def isEmpty(dir: String): Boolean = GcolSnapshots.headFiles(dir).isEmpty
+
+  /** Remove a sidecar or scratch table: data files, snapshot log, head. */
   private def deleteDirQuiet(d: Path): Unit = {
     if (Files.isDirectory(d)) {
       val s = Files.list(d)
-      try s.forEach(p => Files.deleteIfExists(p)) finally s.close()
+      try s.forEach(p => deleteDirQuiet(p)) finally s.close()
     }
     Files.deleteIfExists(d)
   }

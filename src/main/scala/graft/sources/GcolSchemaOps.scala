@@ -67,7 +67,7 @@ object GcolSchemaOps {
     val (schema, formers) = state(dir)
     require(schema.fieldNames.contains(name), s"no column `$name`")
     require(schema.length > 1, "cannot drop the last column")
-    val clusterNames = ColumnarFormat.listFiles(dir)
+    val clusterNames = ColumnarFormat.scopedFiles(dir, None)
       .flatMap(f => ColumnarFormat.readFooter(f).clusterBy).toSet
     val dropped = name +: formers.getOrElse(name, Nil)
     require(!dropped.exists(clusterNames.contains),
@@ -97,7 +97,7 @@ object GcolSchemaOps {
 
   private def state(dir: String): (StructType, Map[String, Seq[String]]) =
     ColumnarFormat.readSchemaState(dir).getOrElse {
-      val files = ColumnarFormat.listFiles(dir)
+      val files = ColumnarFormat.scopedFiles(dir, None)
       require(files.nonEmpty, s"no gcol table at $dir")
       (ColumnarFormat.readFooter(files.head).schema, Map.empty)
     }
@@ -111,7 +111,7 @@ object GcolSchemaOps {
                                 formers: Map[String, Seq[String]]): Unit = {
     require(!formers.values.exists(_.contains(name)),
       s"name `$name` is a former name of an existing column")
-    ColumnarFormat.listFiles(dir).foreach { f =>
+    ColumnarFormat.scopedFiles(dir, None).foreach { f =>
       require(!ColumnarFormat.readFooter(f).schema.fieldNames.contains(name),
         s"an existing data file ($f) already carries a column `$name`; " +
           "re-using it would resurrect that data under a new identity")

@@ -1,36 +1,35 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths, StandardCopyOption}
+import java.util.UUID
 
-/** SNAPSHOT COMMITS for a graft-columnar directory — the metadata-
-  * pointer commit model of Delta/Iceberg, closing the one correctness
-  * hole the directory-listing read path cannot close (r15 ADVICE: a
-  * batch scan listing the directory mid-CoW-publish reads rewritten
-  * rows twice).
-  *
-  * Opt-in per table via [[enable]]. Once enabled:
+/** SNAPSHOT COMMITS — the one record of a graft-columnar table's live
+  * files, the metadata-pointer commit model of Delta/Iceberg:
   *
   *   - `_gcol_snapshots/v{N}.json` lists the data files of version N;
   *     `_gcol_head` holds the current version number and is replaced by
   *     an ATOMIC move — a reader sees the old file set or the new one,
-  *     never a mix.
+  *     never a mix. A table's first write is v1.
   *   - Every commit (batch append/overwrite, CoW merge, compaction)
-  *     writes the next snapshot and moves the head LAST. Replaced files
-  *     are KEPT on disk — an in-flight reader planning from the old
-  *     head still finds them, and they back time travel.
-  *   - Readers plan from the head snapshot instead of listing the
-  *     directory; `option("asOf", "N")` plans any retained version —
-  *     time travel for audits/reproducible training runs.
+  *     writes the next snapshot and moves the head LAST. A failed write
+  *     moves no head, so it publishes nothing. Replaced files are KEPT
+  *     on disk — an in-flight reader planning from the old head still
+  *     finds them, and they back time travel.
+  *   - Readers plan from the head snapshot, never from a directory
+  *     listing; `option("asOf", "N")` plans any retained version — time
+  *     travel for audits/reproducible training runs. A streaming read's
+  *     offsets are versions.
   *   - [[vacuum]] deletes files no retained snapshot references (the
   *     explicit GC every snapshot store needs; reading a vacuumed
   *     version fails loudly, never silently partially).
   *
   * Scale shape: a snapshot is O(files) names written once per commit
   * and read once per scan planning — the same driver metadata budget
-  * the footer sweep already pays. Single-writer contract unchanged
-  * (snapshots serialize COMMITS, not writers); the multi-writer
-  * optimistic-concurrency story lives in table/VersionedTable.
+  * the footer sweep already pays. Snapshots serialize COMMITS, not
+  * writers: a version file is published by hard link, so of two
+  * committers that read the same head exactly one wins and the other
+  * fails; the multi-writer retry story lives in table/VersionedTable.
   */
 object GcolSnapshots {
 
@@ -41,12 +40,9 @@ object GcolSnapshots {
     Paths.get(dir).resolve(SnapshotsSubdir)
   private def headPath(dir: String): Path = Paths.get(dir).resolve(HeadName)
 
-  /** Whether this table routes reads/commits through snapshots. */
-  def enabled(dir: String): Boolean = Files.exists(headPath(dir))
-
-  /** Current head version, if snapshots are enabled. */
+  /** Current head version; None before the table's first commit. */
   def headVersion(dir: String): Option[Long] =
-    if (!enabled(dir)) None
+    if (!Files.exists(headPath(dir))) None
     else Some(new String(Files.readAllBytes(headPath(dir)),
       StandardCharsets.UTF_8).trim.toLong)
 
@@ -65,9 +61,9 @@ object GcolSnapshots {
     out.toSeq
   }
 
-  /** Head snapshot's files, or None when snapshots are not enabled. */
-  def headFiles(dir: String): Option[Seq[String]] =
-    headVersion(dir).map(files(dir, _))
+  /** The head snapshot's files; empty before the first commit. */
+  def headFiles(dir: String): Seq[String] =
+    headVersion(dir).fold(Seq.empty[String])(files(dir, _))
 
   def retainedVersions(dir: String): Seq[Long] = {
     val d = snapDir(dir)
@@ -82,19 +78,11 @@ object GcolSnapshots {
     } finally s.close()
   }
 
-  /** Turn snapshot commits on: v1 = the table's current file set. */
-  def enable(dir: String): Unit = {
-    require(!enabled(dir), s"snapshots already enabled at $dir")
-    val names = ColumnarFormat.listFiles(dir).map(_.getFileName.toString)
-    require(names.nonEmpty, s"no gcol table at $dir")
-    commit(dir, names, expectedHead = None)
-  }
-
   /** The SCHEMA STATE a version was committed under: (schema, rename
     * lineage, whether DDL had run) — what an `asOf` read resolves
     * against, so time travel reproduces the version exactly even after
-    * later add/drop/rename DDL. None for snapshots that predate schema
-    * recording (read falls back to the current schema).
+    * later add/drop/rename DDL. None for a snapshot without files or
+    * DDL to take a schema from (read falls back to the current schema).
     */
   def schemaState(dir: String, v: Long)
       : Option[(org.apache.spark.sql.types.StructType, Map[String, Seq[String]], Boolean)] = {
@@ -122,9 +110,11 @@ object GcolSnapshots {
 
   /** Write version head+1 with `names` and move the head pointer —
     * the ATOMIC publish every commit path routes through. `expectedHead`
-    * guards against a lost-update between read and commit (the
-    * single-writer contract made checkable). The commit-time schema
-    * state rides along so `asOf` reads resolve against it.
+    * guards against a lost-update between read and commit, and the
+    * version file is published by hard link, so a second committer that
+    * read the same head fails here instead of overwriting the first's
+    * version. The commit-time schema state rides along so `asOf` reads
+    * resolve against it.
     */
   def commit(dir: String, names: Seq[String],
              expectedHead: Option[Long]): Long = {
@@ -158,30 +148,37 @@ object GcolSnapshots {
         }
       }
     }
-    Files.write(snapDir(dir).resolve(s"v$next.json"),
-      mapper.writeValueAsBytes(root))
+    val tmp = snapDir(dir).resolve(s".tmp-${UUID.randomUUID()}.json")
+    Files.write(tmp, mapper.writeValueAsBytes(root))
+    try Files.createLink(snapDir(dir).resolve(s"v$next.json"), tmp)
+    catch {
+      case _: FileAlreadyExistsException =>
+        throw new IllegalStateException(
+          s"gcol snapshot v$next of $dir was committed by another writer " +
+            s"(this commit read head $cur)")
+    } finally Files.deleteIfExists(tmp)
     // the pointer swap is the commit: tmp + ATOMIC_MOVE on one file
-    val tmp = Paths.get(dir).resolve(HeadName + ".tmp")
-    Files.write(tmp, next.toString.getBytes(StandardCharsets.UTF_8),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    Files.move(tmp, headPath(dir), StandardCopyOption.REPLACE_EXISTING,
+    val headTmp = Paths.get(dir).resolve(s"$HeadName.tmp-${UUID.randomUUID()}")
+    Files.write(headTmp, next.toString.getBytes(StandardCharsets.UTF_8))
+    Files.move(headTmp, headPath(dir), StandardCopyOption.REPLACE_EXISTING,
       StandardCopyOption.ATOMIC_MOVE)
     next
   }
 
-  /** Files ADDED between two retained versions — the file-level change
-    * feed: for append-mostly pipelines (ingest, journaling sinks) the
-    * rows of the added files ARE the logical increment, so an
-    * incremental consumer reads exactly
+  /** Files ADDED between two versions — the file-level change feed: for
+    * append-mostly pipelines (ingest, journaling sinks) the rows of the
+    * added files ARE the logical increment, so an incremental consumer
+    * reads exactly
     * `option("files", addedFiles(dir, lastSeen, head)).load(dir)`
     * instead of re-scanning the table (the Delta CDF shape, at file
-    * granularity: O(delta), not O(table)). For CoW rewrites the added
-    * files also carry the surviving rows of the replaced files —
-    * consumers that need row-level +/- diff against [[removedFiles]]'s
-    * content, both still O(churn).
+    * granularity: O(delta), not O(table)). `from = 0` is the empty
+    * table before v1. For CoW rewrites the added files also carry the
+    * surviving rows of the replaced files — consumers that need
+    * row-level +/- diff against [[removedFiles]]'s content, both still
+    * O(churn).
     */
   def addedFiles(dir: String, from: Long, to: Long): Seq[String] = {
-    val before = files(dir, from).toSet
+    val before = (if (from == 0L) Nil else files(dir, from)).toSet
     files(dir, to).filterNot(before.contains)
   }
 
@@ -198,7 +195,7 @@ object GcolSnapshots {
   def vacuum(dir: String, keepLast: Int = 1): Seq[String] = {
     require(keepLast >= 1, "must keep at least the head snapshot")
     val versions = retainedVersions(dir)
-    require(versions.nonEmpty, s"snapshots not enabled at $dir")
+    require(versions.nonEmpty, s"no gcol table at $dir")
     val keep = versions.takeRight(keepLast)
     val drop = versions.dropRight(keepLast)
     val live: Set[String] = keep.flatMap(files(dir, _)).toSet

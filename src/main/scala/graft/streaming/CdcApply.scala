@@ -6,7 +6,8 @@ import org.apache.spark.sql.types._
 
 /** Streaming CDC apply — the streaming form of q62's MERGE/upsert: a
   * change feed consumed micro-batch by micro-batch, each batch merged
-  * into the running snapshot inside `foreachBatch`.
+  * into a VersionedTable inside `foreachBatch` and committed as one
+  * table version.
   *
   * This is the shape every Delta/Iceberg "streaming MERGE INTO" runs:
   *   - the change source is replayed ONE FILE PER MICRO-BATCH
@@ -15,20 +16,11 @@ import org.apache.spark.sql.types._
   *   - `foreachBatch` gives the batch DataFrame + a monotonically
   *     increasing batch id; inside it the merge is exactly q62's
   *     co-partitioned full-outer join (delete wins, update patches,
-  *     insert appends);
-  *   - the snapshot persists across batches (cache swap per batch, the
-  *     in-memory equivalent of a table version commit). Note persist()
-  *     caches but does NOT truncate lineage: while each version's blocks
-  *     are alive nothing recomputes, but the logical plan still chains
-  *     through every prior merge. A production apply bounds that chain
-  *     with a durable per-version commit (Delta/Iceberg) or
-  *     checkpoint(); here explicit persist/unpersist is kept for its
-  *     deterministic block lifecycle in a shared test JVM, and in local
-  *     mode cached blocks cannot be lost short of JVM death.
+  *     insert appends) under an atomic table commit.
   *
-  * At 100 TB the snapshot lives in a table format and each batch commit
-  * rewrites only touched files; the per-batch dataflow — shuffle on the
-  * merge key, full-outer, filter-out deletes — is identical to this one.
+  * At 100 TB each batch commit rewrites only touched files; the
+  * per-batch dataflow — shuffle on the merge key, full-outer, filter-out
+  * deletes — is identical to this one.
   */
 object CdcApply {
 
@@ -46,57 +38,13 @@ object CdcApply {
         coalesce(col("new_name"), col("c_name")).as("c_name"),
         coalesce(col("new_bal"), col("c_acctbal")).as("c_acctbal"))
 
-  /** Consume every change file under `changesDir` (one per micro-batch,
-    * ordered by file modification time) and return the final snapshot.
-    *
-    * With `checkpointDir` set, the file-source offsets persist across
-    * restarts: a re-run with the same checkpoint applies ONLY files that
-    * arrived since — the exactly-once resume contract a production CDC
-    * apply relies on (the snapshot is the committed state, the
-    * checkpoint is the source cursor; StreamingCdcSpec pins it).
-    */
-  def run(spark: SparkSession, base: DataFrame, changesDir: String,
-          queryName: String = "cdc_apply",
-          checkpointDir: Option[String] = None): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    // AtomicReference, not a captured var: foreachBatch runs on the
-    // stream-execution thread while the caller reads the final snapshot
-    // after stop() — the JMM guarantees visibility only through a proper
-    // barrier, which a plain closure-captured var does not provide.
-    val snapshot = new java.util.concurrent.atomic.AtomicReference(
-      base.persist(StorageLevel.MEMORY_AND_DISK))
-    snapshot.get().count() // materialize the initial table version
-
-    val feed = spark.readStream
-      .schema(changeSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(changesDir)
-
-    val writer = feed.writeStream
-      .queryName(queryName)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val prev = snapshot.get()
-        val next = mergeBatch(prev, batch)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        next.count() // commit this version before dropping the previous
-        prev.unpersist()
-        snapshot.set(next)
-      }
-    val q = checkpointDir
-      .fold(writer)(cp => writer.option("checkpointLocation", cp))
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    snapshot.get()
-  }
-
   /** CDC apply writing THROUGH the transaction log: each micro-batch is
     * merged against the table's latest snapshot and committed as one
     * durable version (graft.table.VersionedTable.merge — q62's merge
-    * core under an atomic commit). This is the production form of `run`:
-    * the in-memory cache-swap becomes a real table version per trigger,
+    * core under an atomic commit). Each trigger is a real table version,
     * so a consumer can time-travel to any batch boundary and a restart
     * resumes from durable state (checkpoint = source cursor, log =
-    * committed state — the same two-cursor contract, now both on disk).
+    * committed state — two cursors, both on disk).
     * The merge targets `latestVersion` INSIDE foreachBatch: micro-batches
     * are serialized by the stream execution thread, so each commit reads
     * the version the previous batch produced and conflicts cannot arise

@@ -75,7 +75,7 @@ object TimerSessionizer {
     }
   }
 
-  /** Live timer-closed sessionization over a gcol journal of events:
+  /** Live timer-closed sessionization over a gcol table of events:
     * watermark delay 0 (replayed history — nothing is late), 30-minute
     * inactivity gap. The caller appends a far-future SENTINEL row
     * (user_id < 0) as the last arrival so the final watermark passes

@@ -112,13 +112,24 @@ final class VersionedTable private (val root: Path) {
   private[graft] def state(version: Long): TableState =
     states(version, version).next()
 
+  /** The latest version's state, from ONE listing of the log: the
+    * latest version and the newest checkpoint at or before it are read
+    * from the same directory listing.
+    */
+  private def latestState: TableState = {
+    val names = logFileNames(logDir)
+    val v = latestVersionIn(names)
+    states(v, v, names).next()
+  }
+
   /** The states of versions `from` to `to`, ascending, built by ONE fold.
     * A checkpoint in the legacy single-object form is not read: the fold
     * then starts at version 0 (no code path deletes log files, and the
     * next auto-checkpoint restores the tail bound).
     */
-  private def states(from: Long, to: Long): Iterator[TableState] = {
-    val cp = latestCheckpoint(logDir, from)
+  private def states(from: Long, to: Long,
+                     names: => List[String] = logFileNames(logDir)): Iterator[TableState] = {
+    val cp = latestCheckpointIn(names, from)
     val base = (if (cp >= 0) readLog(logDir.resolve(checkpointFileName(cp))) else None)
       .fold(TableState.Empty)(TableState.Empty.next)
     (base.version + 1 to to).iterator.map(v => commitAt(logDir, v))
@@ -180,11 +191,12 @@ final class VersionedTable private (val root: Path) {
     * correct, so losing one costs time, never consistency.
     */
   def checkpoint(): Long = {
-    val v = latestVersion
+    val s = latestState
+    val v = s.version
     require(v >= 0, "nothing to checkpoint")
     val target = logDir.resolve(checkpointFileName(v))
     if (!Files.exists(target))
-      try publish(target, encode(state(v).asCommit))
+      try publish(target, encode(s.asCommit))
       catch { case _: FileAlreadyExistsException => () } // racer wrote it
     v
   }
@@ -209,9 +221,9 @@ final class VersionedTable private (val root: Path) {
     * version v"; the commit that created v does.
     */
   def snapshot(spark: SparkSession, versionAsOf: Option[Long] = None): DataFrame = {
-    val v = versionAsOf.getOrElse(latestVersion)
-    require(v >= 0, s"table at $root has no committed version")
-    snapshotOf(spark, state(v))
+    val s = versionAsOf.fold(latestState)(state)
+    require(s.version >= 0, s"table at $root has no committed version")
+    snapshotOf(spark, s)
   }
 
   private def snapshotOf(spark: SparkSession, s: TableState): DataFrame = {
@@ -250,8 +262,8 @@ final class VersionedTable private (val root: Path) {
     */
   def snapshotWhere(spark: SparkSession, lo: Long, hi: Long,
                     versionAsOf: Option[Long] = None): (DataFrame, Int, Int) = {
-    val v = versionAsOf.getOrElse(latestVersion)
-    val s = state(v)
+    val s = versionAsOf.fold(latestState)(state)
+    val v = s.version
     val statsCol = s.statsCol.getOrElse(
       throw new IllegalStateException(s"table at $root records no stats column"))
     val kept = s.adds.filter(_.stats.forall { case (mn, mx) => mx >= lo && mn <= hi })
@@ -263,7 +275,7 @@ final class VersionedTable private (val root: Path) {
   }
 
   /** The column this table logs min/max stats for, if any. */
-  def statsColumn: Option[String] = state(latestVersion).statsCol
+  def statsColumn: Option[String] = latestState.statsCol
 
   /** Write `df` as a fresh immutable data directory; returns the add
     * entry (path, rows, and — when the table logs a stats column — the
@@ -336,7 +348,7 @@ final class VersionedTable private (val root: Path) {
     // not even an orphan data file. Validation reads the entry-time
     // constraint set; a constraint added concurrently with this append
     // has the same write-write race Delta documents for its own path.
-    val entry = state(latestVersion)
+    val entry = latestState
     validateConstraints(df, entry.constraints, "append")
     val add = writeData(df, entry.statsCol)
     retrying(maxRetries) {
@@ -415,7 +427,7 @@ final class VersionedTable private (val root: Path) {
     * monotonic, so a batch ≤ this id was already applied and must be
     * skipped on replay — the public Delta txnAppId/txnVersion pattern).
     */
-  def lastTxnId: Option[Long] = state(latestVersion).txn
+  def lastTxnId: Option[Long] = latestState.txn
 
   // ------------------------------------------------------------------
   // CHECK constraints (the Delta `ALTER TABLE ADD CONSTRAINT` surface):
@@ -431,7 +443,7 @@ final class VersionedTable private (val root: Path) {
   def constraintsOf(version: Long): Seq[(String, String)] = state(version).constraints
 
   /** Active CHECK constraints of the latest version. */
-  def checkConstraints: Seq[(String, String)] = constraintsOf(latestVersion)
+  def checkConstraints: Seq[(String, String)] = latestState.constraints
 
   /** Throw [[ConstraintViolationException]] if `df` violates any of
     * `cs`. One combined pass over the batch when all pass (the common
@@ -462,7 +474,7 @@ final class VersionedTable private (val root: Path) {
                          maxRetries: Int = 5): Long = {
     import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
     retrying(maxRetries) {
-      val s = state(latestVersion)
+      val s = latestState
       require(!s.constraints.exists(_._1 == name),
         s"constraint '$name' already exists on $root")
       if (s.version >= 0 &&
@@ -479,7 +491,7 @@ final class VersionedTable private (val root: Path) {
   /** Drop a named CHECK constraint (no-op validation; the set shrinks). */
   def dropCheckConstraint(name: String, maxRetries: Int = 5): Long = {
     retrying(maxRetries) {
-      val s = state(latestVersion)
+      val s = latestState
       require(s.constraints.exists(_._1 == name),
         s"constraint '$name' does not exist on $root")
       commit("dropConstraint", s.version, Nil, Nil,
@@ -673,11 +685,12 @@ final class VersionedTable private (val root: Path) {
     * Returns the deleted table-relative paths.
     */
   def vacuum(horizon: Long, minAgeMs: Long = 600000L): Seq[String] = {
-    val latest = latestVersion
+    val names = logFileNames(logDir)
+    val latest = latestVersionIn(names)
     require(horizon >= 0 && horizon <= latest,
       s"vacuum horizon $horizon outside [0, $latest]")
     // one fold over [horizon, latest], not one replay per version
-    val referenced = states(horizon, latest).flatMap(_.files).toSet
+    val referenced = states(horizon, latest, names).flatMap(_.files).toSet
     val dataDir = root.resolve("data")
     val cutoff = System.currentTimeMillis() - minAgeMs
     val all = Files.list(dataDir)
@@ -902,11 +915,14 @@ object VersionedTable {
     * debris stays invisible to readers.
     */
   private[graft] def latestVersion(logDir: Path): Long =
-    logFileNames(logDir).collect { case VersionFile(v) => v.toLong }.foldLeft(-1L)(math.max)
+    latestVersionIn(logFileNames(logDir))
 
-  /** Largest checkpointed version ≤ `version`, or -1 if none. */
-  private def latestCheckpoint(logDir: Path, version: Long): Long =
-    logFileNames(logDir).collect { case CheckpointFile(v) if v.toLong <= version => v.toLong }
+  private def latestVersionIn(names: List[String]): Long =
+    names.collect { case VersionFile(v) => v.toLong }.foldLeft(-1L)(math.max)
+
+  /** Largest checkpointed version ≤ `version` in `names`, or -1 if none. */
+  private def latestCheckpointIn(names: List[String], version: Long): Long =
+    names.collect { case CheckpointFile(v) if v.toLong <= version => v.toLong }
       .foldLeft(-1L)(math.max)
 
   /** Create a new table at `root` with `df` as version 0. `statsCol`

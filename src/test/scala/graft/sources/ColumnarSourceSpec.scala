@@ -35,6 +35,11 @@ class ColumnarSourceSpec extends AnyFunSuite with SparkSessionTestWrapper {
     here ++ kids.flatMap(collectAll(_)(pf))
   }
 
+  /** File name -> content hash over the head snapshot's files. */
+  private def headHashes(dir: String): Map[String, Int] =
+    ColumnarFormat.scopedFiles(dir, None).map(f => f.getFileName.toString ->
+      java.util.Arrays.hashCode(java.nio.file.Files.readAllBytes(f))).toMap
+
   private def gcolScan(df: DataFrame): GcolScan = {
     val scans = collectAll(df.queryExecution.executedPlan) {
       case b: BatchScanExec => b.scan
@@ -341,6 +346,10 @@ class ColumnarSourceSpec extends AnyFunSuite with SparkSessionTestWrapper {
         .collect().sorted
       assert(rows.toSeq === Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")),
         s"stream drifted: ${rows.mkString(",")}")
+      // the offsets are snapshot versions: one batch per commit
+      val batches = stream.recentProgress.filter(_.numInputRows > 0)
+      assert(batches.map(_.sources.head.endOffset).toSeq === Seq("1", "2"))
+      assert(batches.map(_.numInputRows).toSeq === Seq(2L, 2L))
     } finally stream.stop()
   }
 
@@ -653,6 +662,7 @@ class ColumnarSourceSpec extends AnyFunSuite with SparkSessionTestWrapper {
   }
 
   test("copy-on-write merge: affected files rewritten, others byte-identical, journal appended once") {
+    // the snapshot log is the commit journal: the merge commits ONE version
     import spark.implicits._
     val dir = tmp()
     // 4 key-sorted files of 1000 rows each; changes touch ONLY file 0's
@@ -661,10 +671,8 @@ class ColumnarSourceSpec extends AnyFunSuite with SparkSessionTestWrapper {
         ($"id" * 10).cast(DoubleType).as("v"))
       .repartitionByRange(4, $"id").sortWithinPartitions("id")
       .write.format("graft-columnar").mode("overwrite").save(dir)
-    val before = ColumnarFormat.listFiles(dir)
-      .map(f => f.getFileName.toString ->
-        java.util.Arrays.hashCode(java.nio.file.Files.readAllBytes(f))).toMap
-    val journalBefore = ColumnarFormat.journal(dir).size
+    val before = headHashes(dir)
+    assert(GcolSnapshots.headVersion(dir) === Some(1L))
     val changes = spark.createDataFrame(java.util.Arrays.asList(
       org.apache.spark.sql.Row(5L, "U", 999.0),
       org.apache.spark.sql.Row(7L, "D", null),
@@ -676,19 +684,18 @@ class ColumnarSourceSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val published = GcolRowOps.merge(spark, dir, changes, "k",
       Map("v" -> "new_v"))
     assert(published.nonEmpty)
-    val after = ColumnarFormat.listFiles(dir)
-      .map(f => f.getFileName.toString ->
-        java.util.Arrays.hashCode(java.nio.file.Files.readAllBytes(f))).toMap
+    val after = headHashes(dir)
     // the three files whose ranges the changes never touch are the SAME
-    // bytes; the affected file is gone, replaced by the published names
+    // bytes; the affected file left the head, replaced by the published
+    // names
     val untouched = before.keySet.intersect(after.keySet)
     assert(untouched.size === 3, s"expected 3 untouched files: $before -> $after")
     untouched.foreach(n => assert(before(n) === after(n), s"$n was rewritten"))
     published.foreach(n => assert(after.contains(n)))
-    // journal appended the published names exactly once
-    val j = ColumnarFormat.journal(dir)
-    assert(j.size === journalBefore + published.size)
-    published.foreach(n => assert(j.count(_ == n) === 1))
+    // one new version adds exactly the published names, once
+    assert(GcolSnapshots.headVersion(dir) === Some(2L))
+    assert(GcolSnapshots.addedFiles(dir, 1L, 2L).sorted === published.sorted)
+    assert(GcolSnapshots.removedFiles(dir, 1L, 2L).size === 1)
     // and the table content is the merged state
     val back = spark.read.format("graft-columnar").load(dir)
     assert(back.count() === 4000) // -1 delete +1 insert
@@ -725,7 +732,7 @@ class ColumnarSourceSpec extends AnyFunSuite with SparkSessionTestWrapper {
         org.apache.spark.sql.types.StructField("op", StringType))))
     GcolRowOps.merge(spark, dir, changes, "k", Map.empty)
     // every file still declares the cluster column with pure blocks
-    ColumnarFormat.listFiles(dir).foreach { f =>
+    ColumnarFormat.scopedFiles(dir, None).foreach { f =>
       val ft = ColumnarFormat.readFooter(f)
       assert(ft.clusterBy === Some("g"), s"$f lost clusterBy through merge")
     }
@@ -883,6 +890,9 @@ class ColumnarSourceSpec extends AnyFunSuite with SparkSessionTestWrapper {
       assert(state.nonEmpty)
       assert(state.head.numRowsTotal < 3100,
         s"watermark never evicted dedup state: ${state.head.numRowsTotal}")
+      // one data batch per arrival, each ending at that arrival's version
+      val batches = q.recentProgress.filter(_.numInputRows > 0)
+      assert(batches.map(_.sources.head.endOffset).toSeq === Seq("1", "2"))
     } finally q.stop()
   }
 
@@ -1198,12 +1208,14 @@ class ColumnarSourceSpec extends AnyFunSuite with SparkSessionTestWrapper {
     spark.range(0, 2000).select($"id".as("k"), ($"id" * 10).as("v"))
       .repartitionByRange(2, $"id").sortWithinPartitions("id")
       .write.format("graft-columnar").mode("overwrite").save(dir)
-    // rewrite file 0's range: its journal line now names a DELETED file
+    // rewrite file 0's range: version 2 replaces a file version 1 added,
+    // which stays on disk
     val changes = Seq((5L, "D", 0L)).toDF("k", "op", "new_v")
     GcolRowOps.merge(spark, dir, changes, "k", Map("v" -> "new_v"))
-    val gone = ColumnarFormat.journal(dir).filterNot(rel =>
-      java.nio.file.Files.exists(java.nio.file.Paths.get(dir).resolve(rel)))
-    assert(gone.nonEmpty, "the rewrite should have replaced a journaled file")
+    val gone = GcolSnapshots.removedFiles(dir, 1L, 2L)
+    assert(gone.nonEmpty, "the rewrite should have replaced a version-1 file")
+    gone.foreach(rel => assert(
+      java.nio.file.Files.exists(java.nio.file.Paths.get(dir).resolve(rel))))
     // a FRESH stream from offset 0 replays without crashing and
     // delivers exactly the post-rewrite state (ignoreChanges contract)
     val qn = "gcol_replay_" + System.nanoTime()
@@ -1217,6 +1229,7 @@ class ColumnarSourceSpec extends AnyFunSuite with SparkSessionTestWrapper {
       val want = spark.read.format("graft-columnar").load(dir)
         .agg(count(lit(1)), sum($"k")).collect().head
       assert(got === want, s"replayed $got, table holds $want")
+      assert(stream.lastProgress.sources.head.endOffset === "2")
     } finally stream.stop()
   }
 
@@ -1276,7 +1289,6 @@ class ColumnarSourceSpec extends AnyFunSuite with SparkSessionTestWrapper {
     spark.range(0, 4000).select($"id".as("k"), ($"id" * 10).as("v"))
       .repartitionByRange(4, $"id").sortWithinPartitions("id")
       .write.format("graft-columnar").mode("overwrite").save(dir)
-    GcolSnapshots.enable(dir)
     assert(GcolSnapshots.headVersion(dir) === Some(1L))
     val v1Files = GcolSnapshots.files(dir, 1L)
     val v1Rows = spark.read.format("graft-columnar").load(dir)
@@ -1305,9 +1317,8 @@ class ColumnarSourceSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(spark.read.format("graft-columnar").load(dir).count() === 4000)
     assert(spark.read.format("graft-columnar").option("asOf", "2")
       .load(dir).count() === 3999)
-    // streaming replay from 0 on a snapshot table delivers the HEAD
-    // state once — journaled-but-replaced files are skipped as live-set
-    // misses, not read twice
+    // streaming replay from 0 delivers the HEAD state once — files a
+    // later version replaced are skipped, not read twice
     val qn = "gcol_snap_stream_" + System.nanoTime()
     val stream = spark.readStream.format("graft-columnar").load(dir)
       .writeStream.format("memory").queryName(qn)
@@ -1338,7 +1349,6 @@ class ColumnarSourceSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val dir = tmp()
     spark.range(0, 1000).select($"id".as("k"), ($"id" * 2).as("v"))
       .write.format("graft-columnar").mode("overwrite").save(dir)
-    GcolSnapshots.enable(dir)
     // plain SQL DDL, metadata-only underneath
     spark.sql(s"ALTER TABLE gcol_ddl.`$dir` RENAME COLUMN v TO val")
     spark.sql(s"ALTER TABLE gcol_ddl.`$dir` ADD COLUMNS (note STRING)")
@@ -1365,11 +1375,10 @@ class ColumnarSourceSpec extends AnyFunSuite with SparkSessionTestWrapper {
   test("incremental reads + small-file compaction: O(delta) consumption, atomic bin-packing") {
     import spark.implicits._
     val dir = tmp()
-    // 32 tiny files (the streaming-sink pathology), snapshot-enabled
+    // 32 tiny files (the streaming-sink pathology) in version 1
     spark.range(0, 4000).select($"id".as("k"), ($"id" * 3).as("v"))
       .repartition(32)
       .write.format("graft-columnar").mode("overwrite").save(dir)
-    GcolSnapshots.enable(dir)
     assert(ColumnarFormat.scopedFiles(dir, None).size === 32)
     // two appends; the file-level change feed is exactly their files
     Seq((90001L, 1L)).toDF("k", "v")
@@ -1453,8 +1462,10 @@ class ColumnarSourceSpec extends AnyFunSuite with SparkSessionTestWrapper {
     GcolRowOps.updateWherePos(spark, udir, "k < 5", Map("v" -> "v + 1"))
     assert(GcolRowOps.readMoRPos(spark, udir)
       .filter($"k" === 0L).collect().head.getLong(1) === 1L)
-    // 3) a mixed-schema directory WITHOUT evolution DDL fails loudly —
-    //    silent null-vectors are reserved for declared evolution
+    // 3) a mixed-schema table WITHOUT evolution DDL fails loudly —
+    //    silent null-vectors are reserved for declared evolution. The
+    //    foreign file is committed into the table's snapshot: a file
+    //    merely copied into the directory is in no version, never read
     val mdir = tmp()
     spark.range(0, 100).select($"id".as("x"), ($"id" * 2).as("y"))
       .write.format("graft-columnar").mode("overwrite").save(mdir)
@@ -1462,9 +1473,13 @@ class ColumnarSourceSpec extends AnyFunSuite with SparkSessionTestWrapper {
     spark.range(0, 100).select($"id".as("x"), ($"id" * 3).as("z"))
       .write.format("graft-columnar").mode("overwrite").save(stray)
     val strayFile = ColumnarFormat.listFiles(stray).head
+    val strayName = "stray-" + strayFile.getFileName.toString
     java.nio.file.Files.copy(strayFile,
-      java.nio.file.Paths.get(mdir).resolve("stray-" +
-        strayFile.getFileName.toString))
+      java.nio.file.Paths.get(mdir).resolve(strayName))
+    assert(spark.read.format("graft-columnar").load(mdir)
+      .agg(sum($"y")).collect().head.getLong(0) === 9900L)
+    GcolSnapshots.commit(mdir, GcolSnapshots.headFiles(mdir) :+ strayName,
+      expectedHead = GcolSnapshots.headVersion(mdir))
     // (a bare count() legitimately answers from footers — row counts
     // are schema-independent; reading VALUES must fail loudly)
     val err = intercept[Exception] {
@@ -1532,7 +1547,6 @@ class ColumnarSourceSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val sdir = tmp()
     spark.range(0, 500).select($"id".as("k"), ($"id" * 2).as("v"))
       .write.format("graft-columnar").mode("overwrite").save(sdir)
-    GcolSnapshots.enable(sdir)
     Seq((9000L, 1L)).toDF("k", "v")
       .write.format("graft-columnar").mode("append").save(sdir) // v2
     GcolSchemaOps.dropColumn(sdir, "v")
@@ -1597,5 +1611,80 @@ class ColumnarSourceSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(r2 === noBloom._2)
     assert(scan2.plannedBlocks < scan2.totalBlocks / 4,
       s"bloom should prune most blocks: ${scan2.plannedBlocks}/${scan2.totalBlocks}")
+  }
+
+  test("an overwrite whose commit fails mid-move leaves the previous rows readable") {
+    import spark.implicits._
+    val dir = tmp()
+    Seq((1L, "a"), (2L, "b")).toDF("k", "v")
+      .write.format("graft-columnar").mode("overwrite").save(dir)
+    // the writer creates its staged file when its task starts; the UDF
+    // then deletes it, so the commit's move of that file into the root
+    // fails (the task itself still succeeds)
+    val vanish = udf { (k: Long) =>
+      import scala.jdk.CollectionConverters._
+      val stagings = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
+      try stagings.iterator().asScala
+        .filter(_.getFileName.toString.startsWith("_staging-"))
+        .foreach { st =>
+          val parts = java.nio.file.Files.list(st)
+          try parts.iterator().asScala.foreach(java.nio.file.Files.deleteIfExists)
+          finally parts.close()
+        }
+      finally stagings.close()
+      k
+    }.asNondeterministic()
+    intercept[Exception] {
+      spark.range(9, 10, 1, 1).select(vanish($"id").as("k"), lit("z").as("v"))
+        .write.format("graft-columnar").mode("overwrite").save(dir)
+    }
+    assert(GcolSnapshots.headVersion(dir) === Some(1L))
+    val rows = spark.read.format("graft-columnar").load(dir)
+      .as[(Long, String)].collect().sorted
+    assert(rows.toSeq === Seq((1L, "a"), (2L, "b")),
+      s"the failed overwrite published: ${rows.mkString(",")}")
+  }
+
+  test("an overwrite after a stream consumed a 4-file table reaches the stream") {
+    import spark.implicits._
+    val dir = tmp()
+    spark.range(0, 4000).select($"id".as("k")).repartition(4)
+      .write.format("graft-columnar").mode("overwrite").save(dir)
+    assert(ColumnarFormat.scopedFiles(dir, None).size === 4)
+    val qn = "gcol_stream_overwrite_" + System.nanoTime()
+    val stream = spark.readStream.format("graft-columnar").load(dir)
+      .writeStream.format("memory").queryName(qn)
+      .option("checkpointLocation", tmp())
+      .start()
+    try {
+      stream.processAllAvailable()
+      assert(spark.table(qn).count() === 4000)
+      spark.range(10000, 10010, 1, 1).select($"id".as("k"))
+        .write.format("graft-columnar").mode("overwrite").save(dir)
+      assert(ColumnarFormat.scopedFiles(dir, None).size === 1)
+      stream.processAllAvailable()
+      // rows already delivered stay delivered; the overwrite's rows arrive
+      val got = spark.table(qn)
+      assert(got.count() === 4010)
+      assert(got.filter($"k" >= 10000L).count() === 10)
+    } finally stream.stop()
+  }
+
+  test("a snapshot version another committer published first is never overwritten") {
+    import spark.implicits._
+    val dir = tmp()
+    Seq((1L, "a")).toDF("k", "v")
+      .write.format("graft-columnar").mode("overwrite").save(dir)
+    val h = GcolSnapshots.headVersion(dir).get
+    // a racing committer that read the same head already published h+1
+    val theirs = java.nio.file.Paths.get(dir)
+      .resolve(GcolSnapshots.SnapshotsSubdir).resolve(s"v${h + 1}.json")
+    val content = s"""{"version":${h + 1},"files":[]}"""
+    java.nio.file.Files.write(theirs, content.getBytes("UTF-8"))
+    intercept[Exception] {
+      GcolSnapshots.commit(dir, GcolSnapshots.files(dir, h), expectedHead = Some(h))
+    }
+    assert(GcolSnapshots.headVersion(dir) === Some(h))
+    assert(new String(java.nio.file.Files.readAllBytes(theirs), "UTF-8") === content)
   }
 }

@@ -826,6 +826,7 @@ class TableSpec extends AnyFunSuite with SparkSessionTestWrapper {
     import spark.implicits._
     val t = freshTable()
 
+    // three batches over DISJOINT key sets: updates, deletes, inserts
     val upd = base.filter($"c_custkey" % 10 === 0)
       .select($"c_custkey", lit("U").as("op"),
         lit(null).cast("string").as("new_name"),
@@ -834,20 +835,37 @@ class TableSpec extends AnyFunSuite with SparkSessionTestWrapper {
       .select($"c_custkey", lit("D").as("op"),
         lit(null).cast("string").as("new_name"),
         lit(null).cast("double").as("new_bal"))
+    val ins = base.filter($"c_custkey" % 13 === 1)
+      .select(($"c_custkey" + 100000).as("c_custkey"), lit("I").as("op"),
+        concat(lit("Customer#new"), $"c_custkey".cast("string")).as("new_name"),
+        lit(1000.0).as("new_bal"))
 
     val feedDir = graft.ops.Core.tmp("vt_cdc_feed")
     changeFile(upd, feedDir, "b0.parquet")
     changeFile(del, feedDir, "b1.parquet")
+    changeFile(ins, feedDir, "b2.parquet")
 
     graft.streaming.CdcApply.runThroughTable(spark, t, feedDir)
 
-    // one version per batch: v0 create + v1/v2 merges
-    assert(t.latestVersion == 2L, s"expected 2 merge commits, log at ${t.latestVersion}")
+    // one version per batch: v0 create + v1/v2/v3 merges
+    assert(t.latestVersion == 3L, s"expected 3 merge commits, log at ${t.latestVersion}")
     val finalState = t.snapshot(spark).orderBy("c_custkey").collect()
     val expected = graft.streaming.CdcApply.mergeBatch(
-      graft.streaming.CdcApply.mergeBatch(base, upd), del)
+      graft.streaming.CdcApply.mergeBatch(
+        graft.streaming.CdcApply.mergeBatch(base, upd), del), ins)
       .orderBy("c_custkey").collect()
     assert(finalState.sameElements(expected), "streamed table != sequential merges")
+    // the key sets are disjoint, so the batches also equal ONE merge
+    val oneShot = graft.streaming.CdcApply.mergeBatch(base,
+      upd.unionAll(del).unionAll(ins)).orderBy("c_custkey").collect()
+    assert(finalState.sameElements(oneShot), "streamed table != one-shot merge")
+    // deletes removed, inserts present, an update took effect
+    val keys = finalState.map(_.getLong(0)).toSet
+    assert(!keys.exists(k => k % 7 == 3 && k % 10 != 0 && k < 100000))
+    assert(keys.exists(_ >= 100000))
+    val k0 = base.filter($"c_custkey" % 10 === 0).orderBy("c_custkey").first()
+    assert(finalState.find(_.getLong(0) == k0.getLong(0)).get.getDouble(2) ==
+      k0.getDouble(2) + 100.0)
     // and every intermediate batch boundary is time-travelable
     assert(t.snapshot(spark, Some(1L)).count() == base.count()) // updates only
   }
